@@ -29,19 +29,4 @@ object Tables {
   /** Broadcast-hinted dimension load: at 100 TB the facts shuffle, dims fly. */
   def dim(s: SparkSession, d: String, name: String): DataFrame =
     broadcast(load(s, d, name))
-
-  /** Metadata-only fingerprint of one table's backing files (paths +
-    * sizes + mtimes): stable while the data is, different the moment
-    * any part file is rewritten, added or removed. Keys the in-process
-    * memos (dedup verdict, trained quantizer) so an in-place dataset
-    * rewrite invalidates instead of serving stale rows. */
-  private[graft] def fileFingerprint(dir: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
-      else Seq(f)
-    val parts = walk(new java.io.File(dir, s"$table.parquet"))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}").sorted
-    java.util.UUID.nameUUIDFromBytes(parts.mkString("\n").getBytes).toString
-  }
 }

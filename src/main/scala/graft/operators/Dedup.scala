@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SharedArtifacts, Tables}
 import graft.functions.HashFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -879,70 +879,19 @@ object Dedup {
   def qDedupVerdict(s: SparkSession, dir: String): DataFrame =
     verdictShared(s, dir)
 
-  /** Per-(session, dir, data-fingerprint) memo of the MATERIALIZED
-    * verdict. At 100 TB the KEEP/DROP verdict is a persisted artifact
-    * every consumer joins — never recomputed per query. In-process we
-    * mirror that: the first caller runs the full pipeline and eagerly
-    * caches the result; `q_dedup_verdict`, `q_dedup_by_source`,
-    * `q_dedup_soft` (and any future consumer) all read the same
-    * materialized frame, so the shingle → MinHash → banding →
-    * iterative-CC chain executes exactly once per composite run
-    * (DedupShareSpec pins this via [[ccRuns]]). The key carries a
-    * fingerprint of `documents.parquet` (file paths+sizes+mtimes), so a
-    * dataset regenerated in place — ScaleUp rewrites, reused temp dirs —
-    * invalidates rather than serving stale rows; evicted entries are
-    * unpersisted so cache blocks cannot accumulate per distinct dir.
-    * Entries for stopped sessions are dropped on access. NOTE for bench
-    * readers: within one process, the first of the three verdict
-    * consumers pays the full pipeline and the other two time a memo hit. */
-  private val verdictCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Fingerprint of the verdict's input files: stable while the data is,
-    * different the moment any part file is rewritten, added or removed.
-    * Metadata-only (no reads) — O(#files) driver work. */
-  private def docsFingerprint(dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
-      else Seq(f)
-    val parts = walk(new java.io.File(dir, "documents.parquet"))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}").sorted
-    java.util.UUID.nameUUIDFromBytes(parts.mkString("\n").getBytes).toString
-  }
-
-  private def verdictShared(s: SparkSession, dir: String): DataFrame = {
-    val fp = docsFingerprint(dir)
-    val it = verdictCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val (ks, kdir, kfp) = e.getKey
-      if (ks.sparkContext.isStopped) it.remove()
-      else if ((ks eq s) && kdir == dir && kfp != fp) {
-        e.getValue.unpersist(blocking = false); it.remove()
-      }
+  /** The materialized verdict over `dir`, a [[SharedArtifacts]] entry:
+    * `q_dedup_verdict`, `q_dedup_by_source`, `q_dedup_soft` (and any
+    * future consumer) read the same frame, so the shingle → MinHash →
+    * banding → iterative-CC chain executes once per corpus
+    * (DedupShareSpec pins this via [[ccRuns]]). Cached and counted, not
+    * checkpointed: the analyzed plan keeps the `documents` scan, which
+    * the consumers' lineage records name as their input. */
+  private def verdictShared(s: SparkSession, dir: String): DataFrame =
+    SharedArtifacts(s, "dedup_verdict", dir, "documents") {
+      val v = computeVerdict(s, dir).cache()
+      v.count() // materialize eagerly so every consumer reads, never builds
+      v
     }
-    verdictCache.computeIfAbsent((s, dir, fp),
-      (_: (SparkSession, String, String)) => {
-        val v = computeVerdict(s, dir).cache()
-        v.count() // materialize eagerly so every consumer reads, never builds
-        v
-      })
-  }
-
-  /** Explicit invalidation hook: unpersist and forget every memoized
-    * verdict (all sessions, all dirs). For harnesses that rewrite
-    * datasets mid-process through paths the fingerprint cannot see
-    * (e.g. an object store with delayed mtimes). */
-  def invalidateVerdicts(): Unit = {
-    val it = verdictCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!e.getKey._1.sparkContext.isStopped)
-        e.getValue.unpersist(blocking = false)
-      it.remove()
-    }
-  }
 
   private def computeVerdict(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SharedArtifacts, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -398,35 +398,16 @@ object Multimodal {
     * `q_media_clusters` (the dedup-verdict memo discipline). */
   private[graft] val phashRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private val phashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Memoized banded pair frame per (session, dir, documents
-    * fingerprint). At 100 TB the near-dup pair list is a persisted
-    * artifact every media consumer joins — never recomputed per query;
-    * in-process we mirror that exactly as the dedup verdict and trained
-    * quantizer do: fingerprint-keyed (an in-place rewrite invalidates),
-    * evicted entries unpersisted, stopped sessions dropped on access.
-    */
-  private[graft] def phashPairsShared(s: SparkSession, dir: String): DataFrame = {
-    val fp = Tables.fileFingerprint(dir, "documents")
-    val it = phashCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val (ks, kdir, kfp) = e.getKey
-      if (ks.sparkContext.isStopped) it.remove()
-      else if ((ks eq s) && kdir == dir && kfp != fp) {
-        e.getValue.unpersist(blocking = false); it.remove()
-      }
+  /** The banded pair census over `dir`, a [[SharedArtifacts]] entry read
+    * by every media consumer. Cached and counted, not checkpointed: the
+    * analyzed plan keeps the `documents` scan for the consumers' lineage. */
+  private[graft] def phashPairsShared(s: SparkSession, dir: String): DataFrame =
+    SharedArtifacts(s, "phash_pairs", dir, "documents") {
+      phashRuns.incrementAndGet()
+      val p = phashPairs(Tables.documents(s, dir)).cache()
+      p.count() // materialize eagerly so every consumer reads, never builds
+      p
     }
-    phashCache.computeIfAbsent((s, dir, fp),
-      (_: (SparkSession, String, String)) => {
-        phashRuns.incrementAndGet()
-        val p = phashPairs(Tables.documents(s, dir)).cache()
-        p.count() // materialize eagerly so every consumer reads, never builds
-        p
-      })
-  }
 
   private[graft] def phashPairs(docs: DataFrame): DataFrame = {
     // cached: a hard barrier (the band explode's two self-join sides and

@@ -53,4 +53,17 @@ trait SparkTestBase { self: Suite =>
       rm(dir)
     }
   }
+
+  /** Runs `f` on a fresh copy of [[sfDir]]: a dir no shared artifact has
+    * been built for, so a spec can count builds exactly whatever suites
+    * ran before it. */
+  def withSfCopy[T](f: String => T): T = withTempDir { dir =>
+    val src = java.nio.file.Paths.get(sfDir)
+    val paths = java.nio.file.Files.walk(src)
+    try paths.forEach { p =>
+      val t = dir.toPath.resolve(src.relativize(p).toString)
+      if (!java.nio.file.Files.exists(t)) java.nio.file.Files.copy(p, t)
+    } finally paths.close()
+    f(dir.getAbsolutePath)
+  }
 }

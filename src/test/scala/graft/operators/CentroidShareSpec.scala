@@ -13,19 +13,20 @@ import org.scalatest.funspec.AnyFunSpec
 class CentroidShareSpec extends AnyFunSpec with SparkTestBase {
 
   it("trains Lloyd once across ivf + profile + semantic-dedup consumers") {
-    val before = Similarity.centroidRuns.get()
-    assert(Similarity.qKnnIvf(spark, sfDir).count() > 0)
-    assert(Similarity.qKmeansProfile(spark, sfDir).count() > 0)
-    assert(Similarity.qDedupSemantic(spark, sfDir).count() > 0)
-    val runs = Similarity.centroidRuns.get() - before
-    assert(runs <= 1,
-      s"Lloyd training executed $runs times across three consumers; " +
-        "the memoized quantizer must train at most once " +
-        "(0 if an earlier suite already populated the memo)")
-    val before2 = Similarity.centroidRuns.get()
-    Similarity.qKnnIvf(spark, sfDir).count()
-    assert(Similarity.centroidRuns.get() == before2,
-      "re-reading the quantizer retrained Lloyd")
+    withSfCopy { dir =>
+      val before = Similarity.centroidRuns.get()
+      assert(Similarity.qKnnIvf(spark, dir).count() > 0)
+      assert(Similarity.qKmeansProfile(spark, dir).count() > 0)
+      assert(Similarity.qDedupSemantic(spark, dir).count() > 0)
+      val runs = Similarity.centroidRuns.get() - before
+      assert(runs == 1,
+        s"Lloyd training executed $runs times across three consumers on a " +
+          "fresh dir; the memoized quantizer must train exactly once")
+      val before2 = Similarity.centroidRuns.get()
+      Similarity.qKnnIvf(spark, dir).count()
+      assert(Similarity.centroidRuns.get() == before2,
+        "re-reading the quantizer retrained Lloyd")
+    }
   }
 
   it("an in-place embeddings rewrite invalidates the memo") {

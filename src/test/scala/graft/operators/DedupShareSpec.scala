@@ -12,22 +12,23 @@ import org.scalatest.funspec.AnyFunSpec
 class DedupShareSpec extends AnyFunSpec with SparkTestBase {
 
   it("runs the CC pipeline once across verdict + by_source + soft") {
-    val before = Dedup.ccRuns.get()
-    val v = Dedup.qDedupVerdict(spark, sfDir).count()
-    val bs = Dedup.qDedupBySource(spark, sfDir).count()
-    val soft = Dedup.qDedupSoft(spark, sfDir).count()
-    assert(v > 0 && bs > 0 && soft > 0)
-    val runs = Dedup.ccRuns.get() - before
-    assert(runs <= 1,
-      s"verdict pipeline executed $runs times across three consumers; " +
-        "the materialized verdict must be computed at most once " +
-        "(0 if an earlier suite already populated the memo)")
-    // and a second composite sweep is fully memoized
-    val before2 = Dedup.ccRuns.get()
-    Dedup.qDedupBySource(spark, sfDir).count()
-    Dedup.qDedupSoft(spark, sfDir).count()
-    assert(Dedup.ccRuns.get() == before2,
-      "re-reading the verdict recomputed the CC pipeline")
+    withSfCopy { dir =>
+      val before = Dedup.ccRuns.get()
+      val v = Dedup.qDedupVerdict(spark, dir).count()
+      val bs = Dedup.qDedupBySource(spark, dir).count()
+      val soft = Dedup.qDedupSoft(spark, dir).count()
+      assert(v > 0 && bs > 0 && soft > 0)
+      val runs = Dedup.ccRuns.get() - before
+      assert(runs == 1,
+        s"verdict pipeline executed $runs times across three consumers on a " +
+          "fresh dir; the materialized verdict must be computed exactly once")
+      // and a second composite sweep is fully memoized
+      val before2 = Dedup.ccRuns.get()
+      Dedup.qDedupBySource(spark, dir).count()
+      Dedup.qDedupSoft(spark, dir).count()
+      assert(Dedup.ccRuns.get() == before2,
+        "re-reading the verdict recomputed the CC pipeline")
+    }
   }
 
   it("a dataset regenerated in place invalidates the memo instead of serving stale rows") {

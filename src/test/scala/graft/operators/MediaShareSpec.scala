@@ -9,15 +9,32 @@ import org.scalatest.funspec.AnyFunSpec
   */
 class MediaShareSpec extends AnyFunSpec with SparkTestBase {
 
-  it("the pair scan runs at most once across both media consumers") {
-    val before = Multimodal.phashRuns.get()
-    val pairs = Multimodal.qMediaPhash(spark, sfDir).collect()
-    Multimodal.qMediaClusters(spark, sfDir).collect()
-    Multimodal.qMediaPhash(spark, sfDir).collect()
-    val after = Multimodal.phashRuns.get()
-    // 0 if another suite already warmed this dir; never more than 1
-    assert(after - before <= 1, s"pair scan ran ${after - before} times")
-    assert(pairs.nonEmpty || pairs.isEmpty) // collect() sanity, no throw
+  it("the pair scan runs once across both media consumers") {
+    withSfCopy { dir =>
+      val before = Multimodal.phashRuns.get()
+      Multimodal.qMediaPhash(spark, dir).collect()
+      Multimodal.qMediaClusters(spark, dir).collect()
+      Multimodal.qMediaPhash(spark, dir).collect()
+      val runs = Multimodal.phashRuns.get() - before
+      assert(runs == 1, s"pair scan ran $runs times on a fresh dir")
+    }
+  }
+
+  it("an in-place documents rewrite invalidates the memo") {
+    withTempDir { dir =>
+      val src = new java.io.File(sfDir, "documents.parquet").toPath
+      val dst = new java.io.File(dir, "documents.parquet").toPath
+      java.nio.file.Files.copy(src, dst)
+      val before = Multimodal.phashRuns.get()
+      val n1 = Multimodal.qMediaPhash(spark, dir.getAbsolutePath).count()
+      assert(Multimodal.phashRuns.get() - before == 1)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 5000))
+      val n2 = Multimodal.qMediaPhash(spark, dir.getAbsolutePath).count()
+      assert(Multimodal.phashRuns.get() - before == 2,
+        "an in-place rewrite must invalidate the memoized pair census")
+      assert(n1 == n2)
+    }
   }
 
   it("the memoized frame and a fresh computation agree row-for-row") {

@@ -12,18 +12,19 @@ import org.scalatest.funspec.AnyFunSpec
 class PqShareSpec extends AnyFunSpec with SparkTestBase {
 
   it("trains PQ codebooks once across pq + recall consumers") {
-    val before = Similarity.pqRuns.get()
-    assert(Similarity.qKnnPq(spark, sfDir).count() > 0)
-    assert(Similarity.qKnnRecall(spark, sfDir).count() > 0)
-    val runs = Similarity.pqRuns.get() - before
-    assert(runs <= 1,
-      s"PQ training executed $runs times across two consumers; " +
-        "the memoized codebooks must train at most once " +
-        "(0 if an earlier suite already populated the memo)")
-    val before2 = Similarity.pqRuns.get()
-    Similarity.qKnnPq(spark, sfDir).count()
-    assert(Similarity.pqRuns.get() == before2,
-      "re-reading the codebooks retrained PQ")
+    withSfCopy { dir =>
+      val before = Similarity.pqRuns.get()
+      assert(Similarity.qKnnPq(spark, dir).count() > 0)
+      assert(Similarity.qKnnRecall(spark, dir).count() > 0)
+      val runs = Similarity.pqRuns.get() - before
+      assert(runs == 1,
+        s"PQ training executed $runs times across two consumers on a " +
+          "fresh dir; the memoized codebooks must train exactly once")
+      val before2 = Similarity.pqRuns.get()
+      Similarity.qKnnPq(spark, dir).count()
+      assert(Similarity.pqRuns.get() == before2,
+        "re-reading the codebooks retrained PQ")
+    }
   }
 
   it("an in-place embeddings rewrite invalidates the memo") {

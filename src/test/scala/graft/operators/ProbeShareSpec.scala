@@ -13,19 +13,20 @@ import org.scalatest.funspec.AnyFunSpec
 class ProbeShareSpec extends AnyFunSpec with SparkTestBase {
 
   it("trains the probe once across auc + gains + uncertainty consumers") {
-    val before = Similarity.probeRuns.get()
-    assert(Similarity.qAucProbe(spark, sfDir).count() > 0)
-    assert(Similarity.qGainsCurve(spark, sfDir).count() > 0)
-    assert(Similarity.qUncertaintySample(spark, sfDir).count() > 0)
-    val runs = Similarity.probeRuns.get() - before
-    assert(runs <= 1,
-      s"probe GD executed $runs times across three consumers; " +
-        "the memoized weights must train at most once " +
-        "(0 if an earlier suite already populated the memo)")
-    val before2 = Similarity.probeRuns.get()
-    Similarity.qAucProbe(spark, sfDir).count()
-    assert(Similarity.probeRuns.get() == before2,
-      "re-reading the probe weights retrained the GD loop")
+    withSfCopy { dir =>
+      val before = Similarity.probeRuns.get()
+      assert(Similarity.qAucProbe(spark, dir).count() > 0)
+      assert(Similarity.qGainsCurve(spark, dir).count() > 0)
+      assert(Similarity.qUncertaintySample(spark, dir).count() > 0)
+      val runs = Similarity.probeRuns.get() - before
+      assert(runs == 1,
+        s"probe GD executed $runs times across three consumers on a " +
+          "fresh dir; the memoized weights must train exactly once")
+      val before2 = Similarity.probeRuns.get()
+      Similarity.qAucProbe(spark, dir).count()
+      assert(Similarity.probeRuns.get() == before2,
+        "re-reading the probe weights retrained the GD loop")
+    }
   }
 
   it("memoized weights equal a fresh probeWeights run bit-for-bit") {
