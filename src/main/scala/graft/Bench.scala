@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Benchmark driver: one JSON line with per-query medians.
   *
@@ -36,36 +37,12 @@ object Bench {
   private def loadavg(): Double =
     try new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // split scans at 8 MB, not the 128 MB default: the testdata ships
-      // one file per table, and at sf1 (80 MB lineitem) the default left
-      // every first-stage scan in 1-2 tasks — partitions must track the
-      // corpus, not the file count (the 100 TB knob the brief names)
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      // default openCostInBytes (4 MB) floors the split target at 4 MB,
-      // so a byte-light CPU-heavy table (sf1 documents: 1 MB of text
-      // feeding regex-per-row pipelines) still scanned in ONE task even
-      // with many row groups. 128 KB lets the split target follow
-      // bytes/parallelism down to row-group granularity; dims keep one
-      // row group and are unaffected.
-      .config("spark.sql.files.openCostInBytes", s"${128 * 1024}")
-      .config("spark.ui.enabled", "false")
-      // nanosAsLong is a no-op on TIMESTAMP(MICROS) data but kept so a
-      // regenerated TIMESTAMP(NANOS) events file still reads (the vectorized
-      // reader hard-rejects NANOS without it); EventOps.events branches on
-      // the loaded dtype either way.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     val started = java.time.Instant.now()
     val loadStart = loadavg()
     // default protocol: 1 warmup + 3 timed runs, median reported. The
@@ -86,7 +63,7 @@ object Bench {
         spark.catalog.clearCache() // each run recomputes; no cross-run reuse
         val t0 = System.nanoTime()
         try materialize(fn(spark, sfDir))
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           failed = true
           System.err.println(s"[bench] $name: $e")
         }
@@ -162,10 +139,14 @@ object Bench {
     // round commits, so per-query comparison survives tail truncation.
     // Cpus-stamped (r13 VERDICT item 1): the driver's low-core scaling
     // run previously OVERWROTE the 32-core detail because the path was
-    // fixed — each core count now writes its own file.
+    // fixed — each core count now writes its own file. The plain
+    // BENCH_detail.json is refreshed too: the per-query comparison reads
+    // that fixed name, and the stamped file alone left it empty.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_detail_c$cpus.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detailLine + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
+    Seq(detailPath, "BENCH_detail.json").distinct.foreach { path =>
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), detailLine + "\n")
+      catch { case NonFatal(e) => System.err.println(s"[bench] detail write failed: $e") }
+    }
     // The compact line the driver parses (emitted LAST so it always lands
     // whole inside the tail window) now also names WHICH queries were
     // retimed (capped — the full runs live in the detail file).

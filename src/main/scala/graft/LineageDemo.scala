@@ -2,6 +2,7 @@ package graft
 
 import graft.lineage._
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Usage sample for the lineage surface: install-and-forget listener with
   * an async JSONL sink, one real write, one execution-time failure — the
@@ -10,9 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object LineageDemo {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     val out = java.nio.file.Files.createTempDirectory("graft-demo")
     val jsonl = s"$out/lineage.jsonl"
     Lineage.install(spark, new JsonlFileSink(jsonl))
@@ -28,7 +27,7 @@ object LineageDemo {
     val boom = udf((i: Int) => { if (i >= 0) throw new RuntimeException("demo-boom"); i })
     try spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .select(boom(col("o_orderkey").cast("int"))).collect()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     Thread.sleep(3000) // listener bus + async sink drain
     println(s"=== $jsonl ===")

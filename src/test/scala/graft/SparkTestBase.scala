@@ -7,25 +7,11 @@ import org.scalatest.Suite
   * startup is ~5 s, so suites must not build their own.
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    // nanosAsLong: no-op on TIMESTAMP(MICROS) data, kept so a regenerated
-    // TIMESTAMP(NANOS) events file still reads; see EventOps.events
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 trait SparkTestBase { self: Suite =>
-  lazy val spark: SparkSession = {
-    val s = SparkTestBase.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkTestBase.spark
 
   /** Smallest driver-generated dataset — correctness, not throughput. */
   val sfDir = "/root/testdata/sf0.001"

@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class directly on the compiled classes (bypasses sbt).
 # Usage: tools/run.sh <mainClass> [args...]   (env: SPARK_* as usual, JVM_MEM)
+# Spark's jars come from $SPARK_HOME/jars, else from next to spark-submit.
 CLS="$1"; shift
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+SPARK_HOME="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -9,5 +12,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS -Xmx${JVM_MEM:-8g} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$CLS" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:$SPARK_HOME/jars/*" "$CLS" "$@"
