@@ -1,7 +1,10 @@
 package graft.lineage
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Impact analysis over emitted lineage records: the dataset-level
   * dependency graph (input entity → output entity per successful run) and
@@ -9,11 +12,15 @@ import org.apache.spark.sql.functions._
   * breaks?", the question a lineage catalog exists to answer.
   *
   * Scale design: the edge set lives in a DataFrame (a production catalog
-  * accumulates millions of runs), closure is frontier-expansion with one
-  * equality join per level, localCheckpoint per round to stop plan growth
-  * (the ccLabels pattern from Dedup), and a depth cap with a warning so a
-  * cyclic or adversarial graph cannot loop the driver. Depth counts are
-  * MIN-hop (BFS order guarantees first discovery is shortest).
+  * accumulates millions of runs) that stays distributed and cached for
+  * the walk. Closure is a min-hop frontier walk whose every level is ONE
+  * action, a filter of the cached edges on the frontier's nodes, collected;
+  * the driver keeps the frontier and the depth map, which is the closure
+  * itself. At impact-analysis sizes the fixed cost of each Spark job, not
+  * the edge volume, decides latency, so a level costs one small job rather
+  * than a join, an anti-join and checkpoints. A depth cap with a warning
+  * stops a cyclic or adversarial graph from looping the driver. Depth
+  * counts are MIN-hop (BFS order guarantees first discovery is shortest).
   */
 object LineageGraph {
 
@@ -22,25 +29,36 @@ object LineageGraph {
     * the closure treats them as already-visited and terminates. */
   def edges(s: SparkSession, records: Seq[LineageRecord]): DataFrame = {
     import s.implicits._
-    records
-      .filter(r => r.status == "success" && r.output.isDefined)
-      .flatMap(r => r.inputs.map(i => (i.name, r.output.get.name)))
+    written(records)
+      .flatMap { case (r, out) => r.inputs.map(_.name).filter(_ != null).map(_ -> out) }
       .distinct
       .toDF("src", "dst")
   }
+
+  /** Successful runs that wrote a named output, with that name. */
+  private def written(records: Seq[LineageRecord]): Seq[(LineageRecord, String)] =
+    records.filter(_.status == "success")
+      .flatMap(r => r.output.map(_.name).filter(_ != null).map(r -> _))
+
+  /** Distinct (src, dst) rows of an edge frame, null endpoints dropped. */
+  private def distinctEdges(e: DataFrame): DataFrame =
+    e.filter(col("src").isNotNull && col("dst").isNotNull).distinct()
 
   /** Dataset edges straight off a catalog DataFrame
     * ([[LineageCatalog.loadDf]]) — the million-record path: the catalog
     * never materializes on the driver; extraction is a filter + two
     * explodes + distinct, all distributed. Same edge semantics as
     * [[edges]] (successful runs that wrote an output; self-edges kept).
+    * Both drop edges with a null endpoint: a catalog is outside input, and
+    * an input without a name or a column mapping without an output or
+    * with a null source must not put a null node into a closure.
     */
   def edgesDf(catalog: DataFrame): DataFrame =
     catalog
       .filter(col("status") === "success" && col("output.name").isNotNull)
       .select(explode(col("inputs")).as("in"), col("output.name").as("dst"))
       .select(col("in.name").as("src"), col("dst"))
-      .distinct()
+      .transform(distinctEdges)
 
   /** Column edges off a catalog DataFrame — [[columnEdges]] without the
     * driver round-trip: explode the columnLineage mappings, then their
@@ -51,11 +69,11 @@ object LineageGraph {
       .select(col("output.name").as("out"), explode(col("columnLineage")).as("m"))
       .select(explode(col("m.sources")).as("src"),
         concat(col("out"), lit("."), col("m.output")).as("dst"))
-      .distinct()
+      .transform(distinctEdges)
 
   /** [[downstream]] over a persisted catalog path — loads the JSONL as a
     * distributed scan and walks [[edgesDf]]; the driver holds only the
-    * frontier bookkeeping, never the record set. */
+    * frontier and the closure, never the record set. */
   def downstreamCatalog(s: SparkSession, catalogPath: String, root: String,
       maxDepth: Int = 20): DataFrame =
     downstreamOverEdges(s, edgesDf(LineageCatalog.loadDf(s, catalogPath)),
@@ -71,31 +89,8 @@ object LineageGraph {
   def downstreamOverEdges(s: SparkSession, edgeFrame: DataFrame, root: String,
       maxDepth: Int = 20): DataFrame = {
     import s.implicits._
-    val e = edgeFrame.cache()
-    try {
-      var frontier = Seq(root).toDF("entity").withColumn("depth", lit(0))
-      var all = frontier
-      var depth = 0
-      var converged = false
-      while (!converged && depth < maxDepth) {
-        depth += 1
-        val next = frontier.join(e, col("entity") === col("src"))
-          .select(col("dst").as("entity")).distinct()
-          .join(all.select(col("entity").as("seen")),
-            col("entity") === col("seen"), "left_anti")
-          .withColumn("depth", lit(depth))
-          .localCheckpoint()
-        if (next.isEmpty) converged = true
-        else {
-          all = all.unionByName(next).localCheckpoint()
-          frontier = next
-        }
-      }
-      if (!converged)
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"lineage closure capped at depth $maxDepth below '$root'")
-      all
-    } finally e.unpersist()
+    walk(edgeFrame, Seq(root), maxDepth, s"lineage closure below '$root'")
+      .map { case ((_, node), depth) => (node, depth) }.toDF("entity", "depth")
   }
 
   /** Distinct COLUMN-level edges from successful runs: one
@@ -104,11 +99,10 @@ object LineageGraph {
     * dataset-level one above. */
   def columnEdges(s: SparkSession, records: Seq[LineageRecord]): DataFrame = {
     import s.implicits._
-    records
-      .filter(r => r.status == "success" && r.output.isDefined)
-      .flatMap { r =>
-        val out = r.output.get.name
-        r.columnLineage.flatMap(m => m.sources.map(src => (src, s"$out.${m.output}")))
+    written(records)
+      .flatMap { case (r, out) =>
+        r.columnLineage.filter(_.output != null)
+          .flatMap(m => m.sources.filter(_ != null).map(_ -> s"$out.${m.output}"))
       }
       .distinct
       .toDF("src", "dst")
@@ -132,31 +126,8 @@ object LineageGraph {
   def downstreamColumnsOverEdges(s: SparkSession, edgeFrame: DataFrame,
       rootColumn: String, maxDepth: Int = 20): DataFrame = {
     import s.implicits._
-    val e = edgeFrame.cache()
-    try {
-      var frontier = Seq(rootColumn).toDF("column").withColumn("depth", lit(0))
-      var all = frontier
-      var depth = 0
-      var converged = false
-      while (!converged && depth < maxDepth) {
-        depth += 1
-        val next = frontier.join(e, col("column") === col("src"))
-          .select(col("dst").as("column")).distinct()
-          .join(all.select(col("column").as("seen")),
-            col("column") === col("seen"), "left_anti")
-          .withColumn("depth", lit(depth))
-          .localCheckpoint()
-        if (next.isEmpty) converged = true
-        else {
-          all = all.unionByName(next).localCheckpoint()
-          frontier = next
-        }
-      }
-      if (!converged)
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"column lineage closure capped at depth $maxDepth below '$rootColumn'")
-      all
-    } finally e.unpersist()
+    walk(edgeFrame, Seq(rootColumn), maxDepth, s"column lineage closure below '$rootColumn'")
+      .map { case ((_, column), depth) => (column, depth) }.toDF("column", "depth")
   }
 
   /** PII taint propagation — the governance crossover between the column
@@ -165,7 +136,7 @@ object LineageGraph {
     * downstream column DERIVED from them is tainted, through renames,
     * expressions and joins alike. One multi-root frontier walk over
     * [[columnEdges]] (state = (root, column) pairs — all roots propagate
-    * in the same distributed pass, not one BFS per root); min-hop depth
+    * through the same edge scan per level, not one BFS per root); min-hop depth
     * per (root, column). Returns (pii_root, column, depth) with depth 0
     * rows for the roots themselves.
     */
@@ -182,33 +153,43 @@ object LineageGraph {
   def piiTaintOverEdges(s: SparkSession, edgeFrame: DataFrame,
       taintedRoots: Seq[String], maxDepth: Int = 20): DataFrame = {
     import s.implicits._
-    val e = edgeFrame.cache()
+    walk(edgeFrame, taintedRoots, maxDepth, "PII taint closure")
+      .map { case ((root, column), depth) => (root, column, depth) }
+      .toDF("pii_root", "column", "depth")
+  }
+
+  /** Min-hop closure from every root over a (src, dst) edge frame, as
+    * ((root, node), depth) in discovery order, roots at depth 0. Each
+    * level is ONE action: the edges leaving the frontier, filtered out of
+    * the cached frame and collected; the driver keeps the frontier and
+    * the depth map, which is the closure the caller collects anyway. The
+    * frame is cached (and later unpersisted) here only when the caller
+    * has not cached it already, so a caller walking many roots over one
+    * frame keeps its cache. */
+  private def walk(edgeFrame: DataFrame, roots: Seq[String], maxDepth: Int,
+      what: String): Seq[((String, String), Int)] = {
+    val cacheHere = edgeFrame.storageLevel == StorageLevel.NONE
+    val e = if (cacheHere) edgeFrame.cache() else edgeFrame
     try {
-      var frontier = taintedRoots.map(r => (r, r)).toDF("pii_root", "column")
-        .withColumn("depth", lit(0))
-      var all = frontier
-      var depth = 0
-      var converged = false
-      while (!converged && depth < maxDepth) {
-        depth += 1
-        val next = frontier.join(e, col("column") === col("src"))
-          .select(col("pii_root"), col("dst").as("column")).distinct()
-          .join(all.select(col("pii_root").as("sr"), col("column").as("sc")),
-            col("pii_root") === col("sr") && col("column") === col("sc"),
-            "left_anti")
-          .withColumn("depth", lit(depth))
-          .localCheckpoint()
-        if (next.isEmpty) converged = true
-        else {
-          all = all.unionByName(next).localCheckpoint()
-          frontier = next
-        }
+      val depth = mutable.LinkedHashMap.empty[(String, String), Int]
+      var frontier = roots.distinct.map(r => (r, r))
+      frontier.foreach(depth(_) = 0)
+      var level = 0
+      while (frontier.nonEmpty && level < maxDepth) {
+        level += 1
+        val out = e.filter(col("src").isin(frontier.map(_._2).distinct: _*))
+          .select("src", "dst").collect()
+          .groupMap(_.getString(0))(_.getString(1))
+        frontier = frontier
+          .flatMap { case (root, node) => out.getOrElse(node, Array.empty[String]).map(root -> _) }
+          .distinct.filterNot(depth.contains(_))
+        frontier.foreach(depth(_) = level)
       }
-      if (!converged)
+      if (frontier.nonEmpty)
         org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"PII taint closure capped at depth $maxDepth")
-      all
-    } finally e.unpersist()
+          .warn(s"$what capped at depth $maxDepth")
+      depth.toSeq
+    } finally if (cacheHere) e.unpersist()
   }
 
   /** Entity rollup of [[piiTaint]]: per output entity, how many of its
@@ -236,13 +217,11 @@ object LineageGraph {
     try {
       val roots = e.select(col("src").as("entity")).distinct()
         .collect().map(_.getString(0))
-      // per-root BFS; the root set is catalog-entity-sized (bounded), each
-      // closure is the distributed loop above — over the edge frame
-      // built ONCE here, not re-derived from the record Seq per root
+      // per-root walk; the root set is catalog-entity-sized (bounded), and
+      // every walk scans the edge frame built and cached ONCE here, not
+      // re-derived from the record Seq per root
       val cones = roots.map { r =>
-        val cone = downstreamOverEdges(s, e, r, maxDepth)
-          .filter(col("depth") > 0).count()
-        (r, cone)
+        (r, walk(e, Seq(r), maxDepth, s"lineage closure below '$r'").count(_._2 > 0).toLong)
       }.toSeq.toDF("entity", "downstream_count")
       val direct = e.groupBy("src").agg(countDistinct("dst").as("direct_consumers"))
         .withColumnRenamed("src", "entity")

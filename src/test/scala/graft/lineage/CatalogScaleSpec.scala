@@ -4,11 +4,13 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
 
-/** Catalog-scale lineage: a 100k-record persisted catalog loads and walks
-  * entirely as DataFrames — the driver holds frontier bookkeeping, never
-  * the record set ([[LineageCatalog.load]]'s collect is the small-catalog
-  * convenience path; [[LineageGraph.edgesDf]]/[[LineageGraph.downstreamCatalog]]
-  * are the scale path this spec exercises).
+/** Catalog-scale lineage: a 100k-record persisted catalog loads and
+  * reduces to its edges entirely as DataFrames, and the walk scans those
+  * cached edges once per level — the driver holds the frontier and the
+  * closure's depth map, never the record set ([[LineageCatalog.load]]'s
+  * collect is the small-catalog convenience path;
+  * [[LineageGraph.edgesDf]]/[[LineageGraph.downstreamCatalog]] are the
+  * scale path this spec exercises).
   */
 class CatalogScaleSpec extends AnyFunSpec with SparkTestBase {
 

@@ -1,7 +1,11 @@
 package graft.lineage
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funspec.AnyFunSpec
 
 /** Impact analysis over captured lineage: a real pipeline (chain +
@@ -145,6 +149,103 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
       // direct consumers of a are b and c
       val aRow = report.find(_._1.endsWith("/a")).get
       assert(aRow._2 == 2 && aRow._3 == 3, s"a: $aRow")
+    }
+  }
+
+  /** One closure three ways — the dataset, column and PII walks over the
+    * same (src, dst) frame — each as node -> min-hop depth. */
+  private def closures(e: DataFrame, root: String): Seq[Map[String, Int]] = {
+    def depths(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    Seq(depths(LineageGraph.downstreamOverEdges(spark, e, root)),
+      depths(LineageGraph.downstreamColumnsOverEdges(spark, e, root)),
+      depths(LineageGraph.piiTaintOverEdges(spark, e, Seq(root)).drop("pii_root")))
+  }
+
+  private def edgeFrame(pairs: (String, String)*): DataFrame = {
+    import spark.implicits._
+    pairs.toDF("src", "dst")
+  }
+
+  it("a cycle and a self-edge stop every walk at min-hop depths") {
+    val cycle = edgeFrame("a" -> "b", "b" -> "c", "c" -> "a")
+    closures(cycle, "a").foreach(c => assert(c == Map("a" -> 0, "b" -> 1, "c" -> 2), c))
+    val selfEdge = edgeFrame("a" -> "a", "a" -> "b", "b" -> "b")
+    closures(selfEdge, "a").foreach(c => assert(c == Map("a" -> 0, "b" -> 1), c))
+  }
+
+  it("a chain deeper than maxDepth stops every walk at exactly depths 0..20") {
+    val chain = edgeFrame((0 until 24).map(i => s"n$i" -> s"n${i + 1}"): _*)
+    val want = (0 to 20).map(i => s"n$i" -> i).toMap
+    closures(chain, "n0").foreach(c => assert(c == want, c))
+  }
+
+  it("a walk leaves a caller-cached edge frame cached") {
+    val e = edgeFrame("a" -> "b", "b" -> "c").cache()
+    try {
+      closures(e, "a")
+      assert(e.storageLevel != StorageLevel.NONE, "the walk evicted the caller's cache")
+    } finally e.unpersist()
+  }
+
+  it("catalog edges with a null endpoint never reach a closure") {
+    withTempDir { dir =>
+      val path = new java.io.File(dir, "catalog.jsonl")
+      val w = new java.io.PrintWriter(path)
+      try {
+        // an input without a name; a mapping with a null source; a mapping
+        // without an output
+        w.println("""{"status":"success","inputs":[{"name":"a"},{"kind":"path"}],""" +
+          """"output":{"name":"b"},"columnLineage":[{"output":"x","sources":["a.x",null]},""" +
+          """{"sources":["a.y"]}]}""")
+      } finally w.close()
+      val p = path.getAbsolutePath
+      def pairs(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getString(1)).toSet
+      val catalog = LineageCatalog.loadDf(spark, p)
+      assert(pairs(LineageGraph.edgesDf(catalog)) == Set("a" -> "b"))
+      assert(pairs(LineageGraph.columnEdgesDf(catalog)) == Set("a.x" -> "b.x"))
+      val records = LineageCatalog.load(spark, p)
+      assert(pairs(LineageGraph.edges(spark, records)) == Set("a" -> "b"))
+      assert(pairs(LineageGraph.columnEdges(spark, records)) == Set("a.x" -> "b.x"))
+      val cols = LineageGraph.downstreamColumnsCatalog(spark, p, "a.y").collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(cols == Map("a.y" -> 0), s"null node in the closure: $cols")
+      val taint = LineageGraph.piiTaintCatalog(spark, p, Seq("a.x", "a.y")).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+      assert(taint == Set(("a.x", "a.x", 0), ("a.x", "b.x", 1), ("a.y", "a.y", 0)),
+        s"taint: $taint")
+    }
+  }
+
+  it("a catalog walk runs one action per level") {
+    withTempDir { dir =>
+      val k = 5
+      val path = new java.io.File(dir, "catalog.jsonl")
+      val w = new java.io.PrintWriter(path)
+      try (0 until k).foreach { i =>
+        w.println(s"""{"status":"success","inputs":[{"name":"n$i"}],"output":{"name":"n${i + 1}"}}""")
+      } finally w.close()
+      val marker = "graft-action-count-marker"
+      val actions = new java.util.concurrent.atomic.AtomicInteger
+      @volatile var markerSeen = false
+      val listener = new QueryExecutionListener {
+        private def seen(qe: QueryExecution): Unit =
+          if (qe.analyzed.toString.contains(marker)) markerSeen = true
+          else actions.incrementAndGet()
+        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val cone = LineageGraph.downstreamCatalog(spark, path.getAbsolutePath, "n0").collect()
+          .map(r => r.getString(0) -> r.getInt(1)).toMap
+        assert(cone == (0 to k).map(i => s"n$i" -> i).toMap, cone)
+        // callbacks arrive in order on the listener bus: once the marker's
+        // has, every action of the walk has been counted
+        spark.range(1).select(lit(marker)).collect()
+        assert(eventually()(markerSeen), "marker action never reached the listener")
+        // k levels that find an edge, one that finds none, the caller's collect
+        assert(actions.get <= k + 2, s"${actions.get} actions for a $k-level walk")
+      } finally spark.listenerManager.unregister(listener)
     }
   }
 }
