@@ -2,9 +2,9 @@ package graft.lineage
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Impact analysis over emitted lineage records: the dataset-level
   * dependency graph (input entity → output entity per successful run) and
@@ -12,15 +12,20 @@ import org.apache.spark.storage.StorageLevel
   * breaks?", the question a lineage catalog exists to answer.
   *
   * Scale design: the edge set lives in a DataFrame (a production catalog
-  * accumulates millions of runs) that stays distributed and cached for
-  * the walk. Closure is a min-hop frontier walk whose every level is ONE
-  * action, a filter of the cached edges on the frontier's nodes, collected;
-  * the driver keeps the frontier and the depth map, which is the closure
-  * itself. At impact-analysis sizes the fixed cost of each Spark job, not
-  * the edge volume, decides latency, so a level costs one small job rather
-  * than a join, an anti-join and checkpoints. A depth cap with a warning
-  * stops a cyclic or adversarial graph from looping the driver. Depth
-  * counts are MIN-hop (BFS order guarantees first discovery is shortest).
+  * accumulates millions of runs) that is read once per walk into an edge
+  * index: the edges hash-partitioned on `src`, one `src -> sorted dsts`
+  * map per partition, persisted for the walk and released after it.
+  * Closure is a min-hop frontier walk whose every level is ONE small job
+  * over only the partitions holding frontier nodes, each task returning
+  * just its nodes' consumers; the driver keeps the frontier and the depth
+  * map, which is the closure itself. At impact-analysis sizes the fixed
+  * cost of a Spark query, not the edge volume, decides latency, so a
+  * level skips Catalyst analysis, planning and codegen, and does
+  * |frontier| hash lookups instead of a scan of every edge. Sorted
+  * consumers make the closure's row order independent of partitioning.
+  * A depth cap with a warning stops a cyclic or adversarial graph from
+  * looping the driver. Depth counts are MIN-hop (BFS order guarantees
+  * first discovery is shortest).
   */
 object LineageGraph {
 
@@ -89,7 +94,7 @@ object LineageGraph {
   def downstreamOverEdges(s: SparkSession, edgeFrame: DataFrame, root: String,
       maxDepth: Int = 20): DataFrame = {
     import s.implicits._
-    walk(edgeFrame, Seq(root), maxDepth, s"lineage closure below '$root'")
+    indexed(edgeFrame)(walk(_, Seq(root), maxDepth, s"lineage closure below '$root'"))
       .map { case ((_, node), depth) => (node, depth) }.toDF("entity", "depth")
   }
 
@@ -126,7 +131,8 @@ object LineageGraph {
   def downstreamColumnsOverEdges(s: SparkSession, edgeFrame: DataFrame,
       rootColumn: String, maxDepth: Int = 20): DataFrame = {
     import s.implicits._
-    walk(edgeFrame, Seq(rootColumn), maxDepth, s"column lineage closure below '$rootColumn'")
+    indexed(edgeFrame)(walk(_, Seq(rootColumn), maxDepth,
+      s"column lineage closure below '$rootColumn'"))
       .map { case ((_, column), depth) => (column, depth) }.toDF("column", "depth")
   }
 
@@ -136,7 +142,7 @@ object LineageGraph {
     * downstream column DERIVED from them is tainted, through renames,
     * expressions and joins alike. One multi-root frontier walk over
     * [[columnEdges]] (state = (root, column) pairs — all roots propagate
-    * through the same edge scan per level, not one BFS per root); min-hop depth
+    * through the same index lookup per level, not one BFS per root); min-hop depth
     * per (root, column). Returns (pii_root, column, depth) with depth 0
     * rows for the roots themselves.
     */
@@ -153,43 +159,70 @@ object LineageGraph {
   def piiTaintOverEdges(s: SparkSession, edgeFrame: DataFrame,
       taintedRoots: Seq[String], maxDepth: Int = 20): DataFrame = {
     import s.implicits._
-    walk(edgeFrame, taintedRoots, maxDepth, "PII taint closure")
+    indexed(edgeFrame)(walk(_, taintedRoots, maxDepth, "PII taint closure"))
       .map { case ((root, column), depth) => (root, column, depth) }
       .toDF("pii_root", "column", "depth")
   }
 
-  /** Min-hop closure from every root over a (src, dst) edge frame, as
+  /** The adjacency of a (src, dst) edge frame, built for one walk (or
+    * one report) and released after it: the edges hash-partitioned on
+    * `src` into `spark.sql.shuffle.partitions` partitions, each holding
+    * one `src -> sorted distinct dsts` map, persisted. Never kept across
+    * calls, so a walk always sees the frame as it is now. */
+  private final class EdgeIndex(edgeFrame: DataFrame) {
+    private val partitioner = new HashPartitioner(
+      edgeFrame.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    private val adjacency = edgeFrame.select("src", "dst").rdd
+      .collect { case Row(src: String, dst: String) => src -> dst } // no null endpoint
+      .partitionBy(partitioner)
+      .mapPartitions(it => Iterator(it.toSeq.groupMap(_._1)(_._2).map { case (src, dsts) =>
+        src -> dsts.distinct.sorted.toArray }))
+      .persist()
+
+    /** The sorted consumers of each node that has any: one job whose
+      * tasks run only on the partitions holding the nodes (which ship with
+      * the job), each looking up its own nodes in its partition's map. */
+    def consumers(nodes: Seq[String]): Map[String, Array[String]] = {
+      val wanted = nodes.distinct.groupBy(partitioner.getPartition)
+      adjacency.sparkContext.runJob(adjacency,
+        (ctx: TaskContext, it: Iterator[Map[String, Array[String]]]) => {
+          val adj = it.next()
+          wanted(ctx.partitionId()).flatMap(n => adj.get(n).map(n -> _)).toArray
+        }, wanted.keys.toSeq.sorted).iterator.flatten.toMap
+    }
+
+    def close(): Unit = adjacency.unpersist()
+  }
+
+  private def indexed[T](edgeFrame: DataFrame)(f: EdgeIndex => T): T = {
+    val index = new EdgeIndex(edgeFrame)
+    try f(index) finally index.close()
+  }
+
+  /** Min-hop closure from every root over an [[EdgeIndex]], as
     * ((root, node), depth) in discovery order, roots at depth 0. Each
-    * level is ONE action: the edges leaving the frontier, filtered out of
-    * the cached frame and collected; the driver keeps the frontier and
-    * the depth map, which is the closure the caller collects anyway. The
-    * frame is cached (and later unpersisted) here only when the caller
-    * has not cached it already, so a caller walking many roots over one
-    * frame keeps its cache. */
-  private def walk(edgeFrame: DataFrame, roots: Seq[String], maxDepth: Int,
+    * level is one lookup of the frontier's consumers; the driver keeps
+    * the frontier and the depth map, which is the closure the caller
+    * collects anyway. Consumers come sorted, so the order depends only on
+    * the roots and the edges, never on partitioning. */
+  private def walk(index: EdgeIndex, roots: Seq[String], maxDepth: Int,
       what: String): Seq[((String, String), Int)] = {
-    val cacheHere = edgeFrame.storageLevel == StorageLevel.NONE
-    val e = if (cacheHere) edgeFrame.cache() else edgeFrame
-    try {
-      val depth = mutable.LinkedHashMap.empty[(String, String), Int]
-      var frontier = roots.distinct.map(r => (r, r))
-      frontier.foreach(depth(_) = 0)
-      var level = 0
-      while (frontier.nonEmpty && level < maxDepth) {
-        level += 1
-        val out = e.filter(col("src").isin(frontier.map(_._2).distinct: _*))
-          .select("src", "dst").collect()
-          .groupMap(_.getString(0))(_.getString(1))
-        frontier = frontier
-          .flatMap { case (root, node) => out.getOrElse(node, Array.empty[String]).map(root -> _) }
-          .distinct.filterNot(depth.contains(_))
-        frontier.foreach(depth(_) = level)
-      }
-      if (frontier.nonEmpty)
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"$what capped at depth $maxDepth")
-      depth.toSeq
-    } finally if (cacheHere) e.unpersist()
+    val depth = mutable.LinkedHashMap.empty[(String, String), Int]
+    var frontier = roots.distinct.map(r => (r, r))
+    frontier.foreach(depth(_) = 0)
+    var level = 0
+    while (frontier.nonEmpty && level < maxDepth) {
+      level += 1
+      val out = index.consumers(frontier.map(_._2))
+      frontier = frontier
+        .flatMap { case (root, node) => out.getOrElse(node, Array.empty[String]).map(root -> _) }
+        .distinct.filterNot(depth.contains(_))
+      frontier.foreach(depth(_) = level)
+    }
+    if (frontier.nonEmpty)
+      org.slf4j.LoggerFactory.getLogger(getClass)
+        .warn(s"$what capped at depth $maxDepth")
+    depth.toSeq
   }
 
   /** Entity rollup of [[piiTaint]]: per output entity, how many of its
@@ -217,11 +250,12 @@ object LineageGraph {
     try {
       val roots = e.select(col("src").as("entity")).distinct()
         .collect().map(_.getString(0))
-      // per-root walk; the root set is catalog-entity-sized (bounded), and
-      // every walk scans the edge frame built and cached ONCE here, not
-      // re-derived from the record Seq per root
-      val cones = roots.map { r =>
-        (r, walk(e, Seq(r), maxDepth, s"lineage closure below '$r'").count(_._2 > 0).toLong)
+      // one walk per root, all over one index built here: a root's walk
+      // costs one small job per level, not a query over the edge frame
+      val cones = indexed(e) { index =>
+        roots.map { r =>
+          (r, walk(index, Seq(r), maxDepth, s"lineage closure below '$r'").count(_._2 > 0).toLong)
+        }
       }.toSeq.toDF("entity", "downstream_count")
       val direct = e.groupBy("src").agg(countDistinct("dst").as("direct_consumers"))
         .withColumnRenamed("src", "entity")

@@ -1,5 +1,7 @@
 package graft.lineage
 
+import scala.util.control.NonFatal
+
 import graft.meta.MetadataExtractor
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
@@ -23,8 +25,8 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
     safeEmit(build(funcName, qe, 0L, Some(exception)))
 
   private def safeEmit(r: => Option[LineageRecord]): Unit =
-    try r.foreach(rec => sinks.foreach(s => try s.emit(rec) catch { case _: Throwable => () }))
-    catch { case _: Throwable => () }
+    try r.foreach(rec => sinks.foreach(s => try s.emit(rec) catch { case NonFatal(_) => () }))
+    catch { case NonFatal(_) => () }
 
   /** Every node of the executed plan, INCLUDING the subtrees hidden
     * behind adaptive-execution leaves: `AdaptiveSparkPlanExec` and each
@@ -51,14 +53,14 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
     val body = PlanExtractor.queryBody(analyzed)
     val rows = try {
       qe.executedPlan.metrics.get("numOutputRows").map(_.value)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
     // Executed-plan metrics: numOutputBytes is populated by the write-path
     // stats tracker on the root command node; filesSize is each scan's
     // post-pruning input size — summed over scans = bytes read.
     val bytesOut = try {
       qe.executedPlan.metrics.get("numOutputBytes").map(_.value)
-    } catch { case _: Throwable => None }
-    val planNodes = try allNodes(qe.executedPlan) catch { case _: Throwable => Seq.empty }
+    } catch { case NonFatal(_) => None }
+    val planNodes = try allNodes(qe.executedPlan) catch { case NonFatal(_) => Seq.empty }
     val bytesIn = {
       val vals = planNodes.collect {
         case p if p.metrics.contains("filesSize") => p.metrics("filesSize").value
@@ -82,7 +84,7 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
           val name = f.tableIdentifier.map(_.unquotedString)
             .getOrElse(f.relation.location.rootPaths.map(_.toString).mkString(","))
           val filters = try f.partitionFilters.map(_.sql)
-            catch { case _: Throwable => Seq.empty[String] }
+            catch { case NonFatal(_) => Seq.empty[String] }
           name -> ScanStat(
             f.metrics.get("filesSize").map(_.value).getOrElse(0L),
             f.metrics.get("numOutputRows").map(_.value).getOrElse(0L),
@@ -107,7 +109,7 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
     // touched (the write stats tracker's numParts metric)
     val partsWritten = try {
       qe.executedPlan.metrics.get("numParts").map(_.value).filter(_ > 0)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
     // Executor-level run metrics (r11 VERDICT item 4): the catalog
     // question "which job blew up the cluster" needs shuffle and memory
     // pressure, not just rows/bytes. Summed over the SAME AQE-aware node
@@ -124,7 +126,7 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
         .distinctBy(_.id)
         .map(_.value).filter(_ >= 0L)
       if (ms.isEmpty) None else Some(ms.sum)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
     val shufWrite = sumMetric("shuffleBytesWritten")
     val shufRead  = sumMetric("localBytesRead", "remoteBytesRead")
     // per-operator task peaks summed = the plan's aggregate memory
@@ -173,7 +175,7 @@ object LineageListener {
           (s"$name.$f", String.valueOf(row.get(i)))
         }
       }.sortBy(_._1)
-    } catch { case _: Throwable => Seq.empty }
+    } catch { case NonFatal(_) => Seq.empty }
 
   /** Recurring-query identity for the catalog side: sha-256 of the
     * CANONICALIZED analyzed plan — `canonicalized` normalizes attribute
@@ -217,13 +219,13 @@ object LineageListener {
       val masked = CREDENTIAL_RE.replaceAllIn(raw, m => m.group(1) + "=*REDACTED*")
       val redacted = spark.conf.getOption("spark.sql.redaction.string.regex") match {
         case Some(p) if p.nonEmpty =>
-          try p.r.replaceAllIn(masked, "*REDACTED*") catch { case _: Throwable => masked }
+          try p.r.replaceAllIn(masked, "*REDACTED*") catch { case NonFatal(_) => masked }
         case _ => masked
       }
       Some(
         if (redacted.length <= QUERY_TEXT_MAX) redacted
         else redacted.take(QUERY_TEXT_MAX) + " ...[truncated]")
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private[lineage] def planFingerprint(
       analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
@@ -232,7 +234,7 @@ object LineageListener {
       val d = java.security.MessageDigest.getInstance("SHA-256")
       d.digest(canonical.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map(b => f"$b%02x").mkString
-    } catch { case _: Throwable => "" }
+    } catch { case NonFatal(_) => "" }
 }
 
 /** One-line enablement, mirroring the reference's install-and-forget UX.

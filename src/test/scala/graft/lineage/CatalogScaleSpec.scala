@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funspec.AnyFunSpec
 
 /** Catalog-scale lineage: a 100k-record persisted catalog loads and
-  * reduces to its edges entirely as DataFrames, and the walk scans those
-  * cached edges once per level — the driver holds the frontier and the
+  * reduces to its edges entirely as DataFrames, and the walk reads those
+  * edges once into a partitioned edge index and looks up each level's
+  * frontier in it — the driver holds the frontier and the
   * closure's depth map, never the record set ([[LineageCatalog.load]]'s
   * collect is the small-catalog convenience path;
   * [[LineageGraph.edgesDf]]/[[LineageGraph.downstreamCatalog]] are the

@@ -1,7 +1,12 @@
 package graft.lineage
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+
 import graft.SparkTestBase
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -179,6 +184,11 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
     closures(chain, "n0").foreach(c => assert(c == want, c))
   }
 
+  it("a caller frame's null endpoints never reach a closure") {
+    val e = edgeFrame("a" -> "b", "a" -> null, (null, "a"), "b" -> null)
+    closures(e, "a").foreach(c => assert(c == Map("a" -> 0, "b" -> 1), c))
+  }
+
   it("a walk leaves a caller-cached edge frame cached") {
     val e = edgeFrame("a" -> "b", "b" -> "c").cache()
     try {
@@ -216,36 +226,151 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
     }
   }
 
-  it("a catalog walk runs one action per level") {
-    withTempDir { dir =>
-      val k = 5
-      val path = new java.io.File(dir, "catalog.jsonl")
-      val w = new java.io.PrintWriter(path)
-      try (0 until k).foreach { i =>
-        w.println(s"""{"status":"success","inputs":[{"name":"n$i"}],"output":{"name":"n${i + 1}"}}""")
-      } finally w.close()
-      val marker = "graft-action-count-marker"
-      val actions = new java.util.concurrent.atomic.AtomicInteger
-      @volatile var markerSeen = false
-      val listener = new QueryExecutionListener {
-        private def seen(qe: QueryExecution): Unit =
-          if (qe.analyzed.toString.contains(marker)) markerSeen = true
-          else actions.incrementAndGet()
-        def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen(qe)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+  /** Writes `records` (JSON objects) as a catalog in `dir`; returns its path. */
+  private def catalogFile(dir: java.io.File, records: Seq[String]): String = {
+    val path = new java.io.File(dir, "catalog.jsonl")
+    val w = new java.io.PrintWriter(path)
+    try records.foreach(w.println) finally w.close()
+    path.getAbsolutePath
+  }
+
+  /** A successful run reading `inputs` and writing `output`. */
+  private def runJson(inputs: Seq[String], output: String): String =
+    inputs.map(i => s"""{"name":"$i"}""").mkString(
+      """{"status":"success","inputs":[""", ",", s"""],"output":{"name":"$output"}}""")
+
+  /** Runs `body`; returns its result, the SQL actions it ran (callbacks
+    * of a `QueryExecutionListener`) and the result tasks of its jobs.
+    * Callbacks reach listeners in order, but late: marker actions before
+    * and after `body`, which run no task themselves, bound what counts. */
+  private def counted[T](body: => T): (T, Int, Int) = {
+    import spark.implicits._
+    val (start, end) = ("graft-count-start-marker", "graft-count-end-marker")
+    def mark(tag: String): Unit = {
+      Seq(1).toDF("i").select(lit(tag)).collect()
+      spark.sparkContext.setJobDescription(tag)
+      try spark.sparkContext.emptyRDD[Int].count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    val actions, tasks = new AtomicInteger
+    // 1 once the start marker's callback has arrived, 2 once the end one's has
+    @volatile var sqlPhase = 0
+    @volatile var jobPhase = 0
+    def phase(tag: String): Int = if (tag.contains(start)) 1 else if (tag.contains(end)) 2 else 0
+    val sql = new QueryExecutionListener {
+      private def seen(qe: QueryExecution): Unit = phase(qe.analyzed.toString) match {
+        case 0 => if (sqlPhase == 1) actions.incrementAndGet()
+        case p => sqlPhase = sqlPhase.max(p)
       }
-      spark.listenerManager.register(listener)
-      try {
-        val cone = LineageGraph.downstreamCatalog(spark, path.getAbsolutePath, "n0").collect()
-          .map(r => r.getString(0) -> r.getInt(1)).toMap
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
+    }
+    val jobs = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (jobPhase == 1 && t.taskType == "ResultTask") tasks.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobPhase = jobPhase.max(phase(String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.job.description")).orNull)))
+    }
+    spark.listenerManager.register(sql)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      mark(start)
+      val result = body
+      mark(end)
+      assert(eventually()(sqlPhase == 2 && jobPhase == 2), "markers never reached the listeners")
+      (result, actions.get, tasks.get)
+    } finally {
+      spark.listenerManager.unregister(sql)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  it("a catalog walk runs two SQL actions, one task per level") {
+    Seq(5, 15).foreach { k =>
+      withTempDir { dir =>
+        val path = catalogFile(dir, (0 until k).map(i => runJson(Seq(s"n$i"), s"n${i + 1}")))
+        val (cone, actions, tasks) = counted(
+          LineageGraph.downstreamCatalog(spark, path, "n0").collect()
+            .map(r => r.getString(0) -> r.getInt(1)).toMap)
         assert(cone == (0 to k).map(i => s"n$i" -> i).toMap, cone)
-        // callbacks arrive in order on the listener bus: once the marker's
-        // has, every action of the walk has been counted
-        spark.range(1).select(lit(marker)).collect()
-        assert(eventually()(markerSeen), "marker action never reached the listener")
-        // k levels that find an edge, one that finds none, the caller's collect
-        assert(actions.get <= k + 2, s"${actions.get} actions for a $k-level walk")
-      } finally spark.listenerManager.unregister(listener)
+        // the edge index's read of the catalog, and the caller's collect
+        assert(actions <= 2, s"$actions SQL actions for a $k-level walk")
+        // a chain's frontier is one node: k levels that find an edge and
+        // one that finds none, each one task on the node's partition
+        assert(tasks <= k + 1, s"$tasks level tasks for a $k-level walk")
+      }
+    }
+  }
+
+  /** The impact report computed on the driver: per source entity, its
+    * distinct direct consumers and its min-hop cone below it, ordered by
+    * cone size, then entity. */
+  private def referenceReport(edges: Seq[(String, String)]): Seq[(String, Long, Long)] = {
+    val out = edges.distinct.groupMap(_._1)(_._2)
+    out.keys.toSeq.map { root =>
+      val seen = mutable.Set(root)
+      var frontier = Seq(root)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(out.getOrElse(_, Nil)).distinct.filter(seen.add)
+      }
+      (root, out(root).distinct.size.toLong, (seen.size - 1).toLong)
+    }.sortBy(r => (-r._3, r._1))
+  }
+
+  private def report(records: Seq[LineageRecord]): Seq[(String, Long, Long)] =
+    LineageGraph.impactReport(spark, records).collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+
+  it("impact report rows match a driver-side reference") {
+    withTempDir { dir =>
+      // a diamond, a cycle back to its root, a self-edge, two components
+      val runs = Seq(Seq("a") -> "b", Seq("a") -> "c", Seq("b", "c") -> "d",
+        Seq("d") -> "a", Seq("d") -> "d", Seq("x") -> "y", Seq("y", "a") -> "z")
+      val records = LineageCatalog.load(spark,
+        catalogFile(dir, runs.map { case (in, out) => runJson(in, out) }))
+      val edges = runs.flatMap { case (in, out) => in.map(_ -> out) }
+      assert(report(records) == referenceReport(edges))
+    }
+  }
+
+  it("impact report SQL actions do not grow with its roots") {
+    // `roots` sources feed one hub that feeds a 3-node chain
+    def actions(roots: Int): Int = withTempDir { dir =>
+      val runs = (0 until roots).map(i => runJson(Seq(s"s$i"), "h")) ++
+        Seq(runJson(Seq("h"), "t0"), runJson(Seq("t0"), "t1"), runJson(Seq("t1"), "t2"))
+      val records = LineageCatalog.load(spark, catalogFile(dir, runs))
+      val (rows, n, _) = counted(report(records))
+      assert(rows.size == roots + 3, rows)
+      n
+    }
+    val few = actions(2)
+    val many = actions(8)
+    assert(many == few, s"$few SQL actions for 2 roots, $many for 8")
+  }
+
+  it("closure rows and their order do not depend on partitions") {
+    withTempDir { dir =>
+      // a root fanning out to 40 children that fan in to 7 grandchildren,
+      // with a column mapping per run
+      val runs = (0 until 40).map(i =>
+        s"""{"status":"success","inputs":[{"name":"r"}],"output":{"name":"c$i"},""" +
+          s""""columnLineage":[{"output":"x","sources":["r.x","r.y"]}]}""") ++
+        (0 until 40).map(i =>
+          s"""{"status":"success","inputs":[{"name":"c$i"}],"output":{"name":"g${i % 7}"},""" +
+            s""""columnLineage":[{"output":"x","sources":["c$i.x"]}]}""")
+      val path = catalogFile(dir, runs)
+      def closures(partitions: Int): Seq[Seq[Row]] = {
+        val before = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+        try Seq(LineageGraph.downstreamCatalog(spark, path, "r"),
+          LineageGraph.downstreamColumnsCatalog(spark, path, "r.x"),
+          LineageGraph.piiTaintCatalog(spark, path, Seq("r.y", "r.x"))).map(_.collect().toSeq)
+        finally spark.conf.set("spark.sql.shuffle.partitions", before)
+      }
+      val one = closures(1)
+      assert(one.map(_.size) == Seq(48, 48, 96), one.map(_.size))
+      Seq(4, 7).foreach(n => assert(closures(n) == one, s"rows differ at $n partitions"))
     }
   }
 }
