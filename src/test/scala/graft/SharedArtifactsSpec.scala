@@ -50,6 +50,38 @@ class SharedArtifactsSpec extends AnyFunSpec with SparkTestBase {
     }
   }
 
+  it("a path entry follows the files of a file, a directory or a glob and releases what it replaces") {
+    withTempDir { d =>
+      def write(f: java.io.File, line: String, append: Boolean = false): Unit = {
+        val w = new java.io.FileWriter(f, append)
+        try w.write(line + "\n") finally w.close()
+      }
+      val file = new java.io.File(d, "catalog.jsonl")
+      val parts = new java.io.File(d, "parts")
+      parts.mkdir()
+      write(file, "{}")
+      write(new java.io.File(parts, "part-0.jsonl"), "{}")
+      val paths = Seq(file.getAbsolutePath, parts.getAbsolutePath, s"${parts.getAbsolutePath}/*.jsonl")
+      val builds = new AtomicInteger(0)
+      val released = new java.util.concurrent.ConcurrentLinkedQueue[Object]()
+      def get(path: String): Object =
+        SharedArtifacts(spark, "value", path) { builds.incrementAndGet(); new Object }(released.add(_))
+      val first = paths.map(get)
+      assert(paths.map(get).zip(first).forall { case (a, b) => a eq b })
+      assert(builds.get == 3 && released.isEmpty)
+      // an appended record changes only the file's entry
+      write(file, "{}", append = true)
+      val second = paths.map(get)
+      assert(!(second.head eq first.head) && second.tail.zip(first.tail).forall { case (a, b) => a eq b })
+      assert(builds.get == 4 && released.toArray.toSeq == Seq(first.head))
+      // a new part file changes the directory's and the glob's entries
+      write(new java.io.File(parts, "part-1.jsonl"), "{}")
+      val third = paths.map(get)
+      assert(third.head eq second.head)
+      assert(builds.get == 6 && released.toArray.toSet == Set(first.head, second(1), second(2)))
+    }
+  }
+
   it("an in-place rewrite releases the old localCheckpoint entry's blocks") {
     withTempDir { d =>
       val dir = d.getAbsolutePath

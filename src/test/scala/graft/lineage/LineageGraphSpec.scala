@@ -1,8 +1,11 @@
 package graft.lineage
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CountDownLatch, Executors}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.collection.mutable
+import scala.concurrent.duration._
+import scala.concurrent.{Await, ExecutionContext, Future}
 
 import graft.SparkTestBase
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
@@ -189,6 +192,14 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
     closures(e, "a").foreach(c => assert(c == Map("a" -> 0, "b" -> 1), c))
   }
 
+  it("a caller frame's numeric endpoints walk as their string names") {
+    import spark.implicits._
+    val e = Seq(1L -> 2L, 2L -> 3L, 1L -> 3L).toDF("src", "dst")
+    closures(e, "1").foreach(c => assert(c == Map("1" -> 0, "2" -> 1, "3" -> 1), c))
+    val ints = Seq(7 -> 8, 8 -> 9).toDF("src", "dst")
+    closures(ints, "7").foreach(c => assert(c == Map("7" -> 0, "8" -> 1, "9" -> 2), c))
+  }
+
   it("a walk leaves a caller-cached edge frame cached") {
     val e = edgeFrame("a" -> "b", "b" -> "c").cache()
     try {
@@ -203,10 +214,10 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
       val w = new java.io.PrintWriter(path)
       try {
         // an input without a name; a mapping with a null source; a mapping
-        // without an output
+        // without an output; a mapping without sources
         w.println("""{"status":"success","inputs":[{"name":"a"},{"kind":"path"}],""" +
           """"output":{"name":"b"},"columnLineage":[{"output":"x","sources":["a.x",null]},""" +
-          """{"sources":["a.y"]}]}""")
+          """{"sources":["a.y"]},{"output":"z"}]}""")
       } finally w.close()
       val p = path.getAbsolutePath
       def pairs(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getString(1)).toSet
@@ -226,24 +237,37 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
     }
   }
 
-  /** Writes `records` (JSON objects) as a catalog in `dir`; returns its path. */
-  private def catalogFile(dir: java.io.File, records: Seq[String]): String = {
-    val path = new java.io.File(dir, "catalog.jsonl")
+  /** Writes `records` (JSON objects) as the catalog `name` in `dir`;
+    * returns its path. */
+  private def catalogFile(dir: java.io.File, records: Seq[String],
+      name: String = "catalog.jsonl"): String = {
+    val path = new java.io.File(dir, name)
     val w = new java.io.PrintWriter(path)
     try records.foreach(w.println) finally w.close()
     path.getAbsolutePath
   }
 
-  /** A successful run reading `inputs` and writing `output`. */
-  private def runJson(inputs: Seq[String], output: String): String =
+  /** A successful run reading `inputs` and writing `output`, with one
+    * column mapping `output.x <- input.x` when `columns` is set. */
+  private def runJson(inputs: Seq[String], output: String, columns: Boolean = false): String = {
+    val mapping =
+      if (columns) inputs.map(i => s""""$i.x"""").mkString(
+        ""","columnLineage":[{"output":"x","sources":[""", ",", "]}]")
+      else ""
     inputs.map(i => s"""{"name":"$i"}""").mkString(
-      """{"status":"success","inputs":[""", ",", s"""],"output":{"name":"$output"}}""")
+      """{"status":"success","inputs":[""", ",", s"""],"output":{"name":"$output"}$mapping}""")
+  }
 
-  /** Runs `body`; returns its result, the SQL actions it ran (callbacks
-    * of a `QueryExecutionListener`) and the result tasks of its jobs.
-    * Callbacks reach listeners in order, but late: marker actions before
-    * and after `body`, which run no task themselves, bound what counts. */
-  private def counted[T](body: => T): (T, Int, Int) = {
+  /** What a body ran: SQL actions (`QueryExecutionListener` callbacks),
+    * Spark jobs, their result tasks, the shuffle bytes its tasks wrote,
+    * and its shuffle map stages. */
+  private case class Counts(actions: Int, jobs: Int, resultTasks: Int, shuffleBytes: Long,
+      mapStages: Int)
+
+  /** Runs `body`; returns its result and what it ran. Callbacks reach
+    * listeners in order, but late: marker actions before and after
+    * `body`, which run no task themselves, bound what counts. */
+  private def counted[T](body: => T): (T, Counts) = {
     import spark.implicits._
     val (start, end) = ("graft-count-start-marker", "graft-count-end-marker")
     def mark(tag: String): Unit = {
@@ -252,7 +276,9 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
       try spark.sparkContext.emptyRDD[Int].count()
       finally spark.sparkContext.setJobDescription(null)
     }
-    val actions, tasks = new AtomicInteger
+    val actions, jobCount, tasks = new AtomicInteger
+    val shuffleBytes = new AtomicLong
+    val mapStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     // 1 once the start marker's callback has arrived, 2 once the end one's has
     @volatile var sqlPhase = 0
     @volatile var jobPhase = 0
@@ -266,11 +292,17 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(qe)
     }
     val jobs = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (jobPhase == 1 && t.taskType == "ResultTask") tasks.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (jobPhase == 1) {
+        if (t.taskType == "ResultTask") tasks.incrementAndGet()
+        if (t.taskType == "ShuffleMapTask") mapStages.add(t.stageId)
+        Option(t.taskMetrics).foreach(m => shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobPhase = jobPhase.max(phase(String.valueOf(
-          Option(j.properties).map(_.getProperty("spark.job.description")).orNull)))
+        phase(String.valueOf(
+          Option(j.properties).map(_.getProperty("spark.job.description")).orNull)) match {
+          case 0 => if (jobPhase == 1) jobCount.incrementAndGet()
+          case p => jobPhase = jobPhase.max(p)
+        }
     }
     spark.listenerManager.register(sql)
     spark.sparkContext.addSparkListener(jobs)
@@ -279,7 +311,7 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
       val result = body
       mark(end)
       assert(eventually()(sqlPhase == 2 && jobPhase == 2), "markers never reached the listeners")
-      (result, actions.get, tasks.get)
+      (result, Counts(actions.get, jobCount.get, tasks.get, shuffleBytes.get, mapStages.size))
     } finally {
       spark.listenerManager.unregister(sql)
       spark.sparkContext.removeSparkListener(jobs)
@@ -290,16 +322,98 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
     Seq(5, 15).foreach { k =>
       withTempDir { dir =>
         val path = catalogFile(dir, (0 until k).map(i => runJson(Seq(s"n$i"), s"n${i + 1}")))
-        val (cone, actions, tasks) = counted(
+        val (cone, n) = counted(
           LineageGraph.downstreamCatalog(spark, path, "n0").collect()
             .map(r => r.getString(0) -> r.getInt(1)).toMap)
         assert(cone == (0 to k).map(i => s"n$i" -> i).toMap, cone)
-        // the edge index's read of the catalog, and the caller's collect
-        assert(actions <= 2, s"$actions SQL actions for a $k-level walk")
+        // the caller's collect; the index's read of the catalog runs
+        // through `toRdd`, no SQL action
+        assert(n.actions <= 2, s"${n.actions} SQL actions for a $k-level walk")
         // a chain's frontier is one node: k levels that find an edge and
         // one that finds none, each one task on the node's partition
-        assert(tasks <= k + 1, s"$tasks level tasks for a $k-level walk")
+        assert(n.resultTasks <= k + 1, s"${n.resultTasks} level tasks for a $k-level walk")
       }
+    }
+  }
+
+  it("a second walk of an unchanged catalog reads nothing but its levels") {
+    Seq(5, 15).foreach { k =>
+      withTempDir { dir =>
+        val path = catalogFile(dir,
+          (0 until k).map(i => runJson(Seq(s"n$i"), s"n${i + 1}", columns = true)))
+        def depths(df: DataFrame) = df.collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+        // the first call, of one kind, builds the index of both graphs
+        depths(LineageGraph.downstreamCatalog(spark, path, "n0"))
+        val (cone, n) = counted(depths(LineageGraph.downstreamCatalog(spark, path, "n0")))
+        assert(cone == (0 to k).map(i => s"n$i" -> i).toMap, cone)
+        assert(n.actions == 1, s"${n.actions} SQL actions for a warm $k-level walk")
+        assert(n.shuffleBytes == 0, s"a warm walk wrote ${n.shuffleBytes} shuffle bytes")
+        assert(n.resultTasks <= k + 1, s"${n.resultTasks} level tasks for a $k-level walk")
+        val (cols, c) = counted(depths(LineageGraph.downstreamColumnsCatalog(spark, path, "n0.x")))
+        assert(cols == (0 to k).map(i => s"n$i.x" -> i).toMap, cols)
+        assert(c.actions == 1 && c.shuffleBytes == 0,
+          s"the first column walk after a dataset walk ran $c")
+      }
+    }
+  }
+
+  it("an append to the catalog reaches the next walk and releases the old index") {
+    withTempDir { dir =>
+      val path = catalogFile(dir, (0 until 3).map(i => runJson(Seq(s"n$i"), s"n${i + 1}")))
+      def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      def cone() = LineageGraph.downstreamCatalog(spark, path, "n0").collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+      val before = stored
+      assert(cone() == (0 to 3).map(i => s"n$i" -> i).toMap)
+      val index = stored -- before
+      assert(index.nonEmpty, "the walk's index holds no blocks")
+      val w = new java.io.FileWriter(path, true)
+      try w.write(runJson(Seq("n3"), "n4") + "\n") finally w.close()
+      assert(cone() == (0 to 4).map(i => s"n$i" -> i).toMap, "the appended edge is not seen")
+      assert((stored & index).isEmpty, s"the replaced index's RDDs ${stored & index} still hold blocks")
+    }
+  }
+
+  it("two threads making the first call on one catalog build its index once") {
+    withTempDir { dir =>
+      val k = 6
+      val path = catalogFile(dir,
+        (0 until k).map(i => runJson(Seq(s"n$i"), s"n${i + 1}", columns = true)))
+      val start = new CountDownLatch(1)
+      val pool = Executors.newFixedThreadPool(2)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try {
+        def call(f: => DataFrame) = Future { start.await(); f.collect().length }
+        val (sizes, n) = counted {
+          val calls = Seq(call(LineageGraph.downstreamCatalog(spark, path, "n0")),
+            call(LineageGraph.downstreamColumnsCatalog(spark, path, "n0.x")))
+          start.countDown()
+          Await.result(Future.sequence(calls), 120.seconds)
+        }
+        assert(sizes == Seq(k + 1, k + 1))
+        // one read and shuffle of the catalog's edges, which both walks share
+        assert(n.mapStages == 1, s"${n.mapStages} shuffle map stages over the catalog")
+      } finally pool.shutdown()
+    }
+  }
+
+  it("graft records no read of its own, and a user's read of the catalog still") {
+    withTempDir { dir =>
+      val path = catalogFile(dir, (0 until 3).map(i => runJson(Seq(s"n$i"), s"n${i + 1}")),
+        "own-reads-catalog.jsonl")
+      val sink = new InMemorySink
+      val l = Lineage.installSync(spark, sink)
+      try {
+        // a cold walk: the index build reads the catalog
+        assert(LineageGraph.downstreamCatalog(spark, path, "n0").collect().length == 4)
+        assert(LineageCatalog.loadDf(spark, path).count() == 3L)
+        def naming = sink.records.filter(_.inputs.exists(_.name.contains("own-reads-catalog")))
+          .map(_.funcName)
+        // callbacks arrive in order: once the user's count is recorded,
+        // any record of the walk has arrived too
+        assert(eventually()(naming.contains("count")), "the user's read of the catalog is not recorded")
+        assert(naming == Seq("count"), s"records naming the catalog: $naming")
+      } finally Lineage.uninstall(spark, l)
     }
   }
 
@@ -336,17 +450,18 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
 
   it("impact report SQL actions do not grow with its roots") {
     // `roots` sources feed one hub that feeds a 3-node chain
-    def actions(roots: Int): Int = withTempDir { dir =>
+    def counts(roots: Int): Counts = withTempDir { dir =>
       val runs = (0 until roots).map(i => runJson(Seq(s"s$i"), "h")) ++
         Seq(runJson(Seq("h"), "t0"), runJson(Seq("t0"), "t1"), runJson(Seq("t1"), "t2"))
       val records = LineageCatalog.load(spark, catalogFile(dir, runs))
-      val (rows, n, _) = counted(report(records))
+      val (rows, n) = counted(report(records))
       assert(rows.size == roots + 3, rows)
       n
     }
-    val few = actions(2)
-    val many = actions(8)
-    assert(many == few, s"$few SQL actions for 2 roots, $many for 8")
+    val few = counts(2)
+    val many = counts(8)
+    assert(many.actions == few.actions, s"${few.actions} SQL actions for 2 roots, ${many.actions} for 8")
+    assert(many.jobs == few.jobs, s"${few.jobs} Spark jobs for 2 roots, ${many.jobs} for 8")
   }
 
   it("closure rows and their order do not depend on partitions") {
@@ -359,8 +474,9 @@ class LineageGraphSpec extends AnyFunSpec with SparkTestBase {
         (0 until 40).map(i =>
           s"""{"status":"success","inputs":[{"name":"c$i"}],"output":{"name":"g${i % 7}"},""" +
             s""""columnLineage":[{"output":"x","sources":["c$i.x"]}]}""")
-      val path = catalogFile(dir, runs)
       def closures(partitions: Int): Seq[Seq[Row]] = {
+        // a fresh catalog file per partition count: each builds its own index
+        val path = catalogFile(dir, runs, s"catalog-$partitions.jsonl")
         val before = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
         try Seq(LineageGraph.downstreamCatalog(spark, path, "r"),
