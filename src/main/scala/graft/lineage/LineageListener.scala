@@ -50,7 +50,7 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
       error: Option[Exception]): Option[LineageRecord] = {
     val spark = qe.sparkSession
     val analyzed = qe.analyzed
-    val body = PlanExtractor.queryBody(analyzed)
+    val shape = PlanShape.of(analyzed)
     val rows = try {
       qe.executedPlan.metrics.get("numOutputRows").map(_.value)
     } catch { case NonFatal(_) => None }
@@ -145,9 +145,9 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
       inputs = inputs,
       output = PlanExtractor.output(analyzed)
         .map(o => if (partsWritten.isDefined) o.copy(partitionsWritten = partsWritten) else o),
-      outputColumns = body.output.map(_.name),
-      columnLineage = ColumnLineage.forPlan(analyzed),
-      schemaFingerprint = MetadataExtractor.schemaFingerprint(body.schema),
+      outputColumns = shape.outputColumns,
+      columnLineage = shape.columnLineage,
+      schemaFingerprint = shape.schemaFingerprint,
       rowsWritten = rows,
       bytesWritten = bytesOut,
       bytesRead = bytesIn,
@@ -158,6 +158,24 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
       planFingerprint = LineageListener.planFingerprint(analyzed),
       queryText = LineageListener.queryText(spark, analyzed),
       observed = LineageListener.harvestObserved(qe)))
+  }
+}
+
+/** What a record says about an action's result: output column names,
+  * column lineage and schema fingerprint. Columns and schema come from
+  * the query body below any write command (a write node has no output
+  * attributes), so batch writes, plain actions and streaming
+  * micro-batches (whose analyzed root is a `WriteToStream`) agree. */
+private[lineage] final case class PlanShape(outputColumns: Seq[String],
+    columnLineage: Seq[ColumnMapping], schemaFingerprint: String)
+
+private[lineage] object PlanShape {
+  val empty: PlanShape = PlanShape(Nil, Nil, "")
+
+  def of(analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): PlanShape = {
+    val body = PlanExtractor.queryBody(analyzed)
+    PlanShape(body.output.map(_.name), ColumnLineage.forPlan(analyzed),
+      MetadataExtractor.schemaFingerprint(body.schema))
   }
 }
 

@@ -17,6 +17,10 @@ object PlanExtractor {
   /** All source entities under `plan`, with the pruned column set each
     * contributes (columns referenced anywhere above the leaf; falls back
     * to the full output for pass-through scans like count(*) over *).
+    * One entry per (kind, name, format): an entity scanned twice (a
+    * self-join, a union of two projections of one file) is one input
+    * whose columns are the union of both scans', in first-seen order —
+    * per-entity scan stats and run diffs key inputs by name.
     */
   def inputs(plan: LogicalPlan): Seq[InputEntity] = {
     // subquery expressions (scalar / IN / EXISTS) hold whole plans of
@@ -26,7 +30,14 @@ object PlanExtractor {
     val body = queryBody(plan)
     val roots = if (body eq plan) Seq(plan) else Seq(plan, body)
     val plans = roots ++ roots.flatMap(_.subqueriesAll)
-    plans.flatMap(inputsOf).distinct
+    val merged = scala.collection.mutable.LinkedHashMap
+      .empty[(String, String, Option[String]), InputEntity]
+    plans.flatMap(inputsOf).foreach { in =>
+      val key = (in.kind, in.name, in.format)
+      merged(key) = merged.get(key).fold(in)(seen =>
+        seen.copy(columnsRead = (seen.columnsRead ++ in.columnsRead).distinct))
+    }
+    merged.values.toSeq
   }
 
   private def inputsOf(plan: LogicalPlan): Seq[InputEntity] = {

@@ -1,5 +1,7 @@
 package graft.lineage
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -10,8 +12,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * `LineageRecord`: sources with per-source rows read, the sink as output
   * entity, rows written, the trigger's execution time — and the query's
   * COLUMN lineage + schema fingerprint, resolved once per run from the
-  * micro-batch's `IncrementalExecution` (a `QueryExecution`, so the same
-  * `ColumnLineage.forPlan` walk the batch listener uses applies verbatim;
+  * micro-batch's `IncrementalExecution` (a `QueryExecution`, so the
+  * batch listener's [[PlanShape]] applies verbatim;
   * the streaming DAG is fixed across batches, so one resolution per runId
   * is cached, not recomputed per micro-batch). A terminated query with an
   * exception emits a failure record.
@@ -38,11 +40,8 @@ final class StreamingLineageListener private (
       new java.lang.ref.WeakReference(spark))
 
   /** Output columns + column lineage + schema fingerprint, per runId. */
-  private case class PlanInfo(outputColumns: Seq[String],
-      columnLineage: Seq[ColumnMapping], fingerprint: String)
-
   private val planInfo =
-    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, PlanInfo]()
+    new java.util.concurrent.ConcurrentHashMap[java.util.UUID, PlanShape]()
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
 
@@ -82,7 +81,7 @@ final class StreamingLineageListener private (
         output = Option(p.sink).map(s => OutputEntity("stream", s.description, None, None)),
         outputColumns = info.outputColumns,
         columnLineage = info.columnLineage,
-        schemaFingerprint = info.fingerprint,
+        schemaFingerprint = info.schemaFingerprint,
         rowsWritten = rowsOut,
         observed = observed)
     }
@@ -91,7 +90,7 @@ final class StreamingLineageListener private (
     * last micro-batch execution. Cached only on success, so a progress
     * event racing the first batch's execution retries on the next one.
     */
-  private def resolvePlanInfo(id: java.util.UUID, runId: java.util.UUID): PlanInfo = {
+  private def resolvePlanInfo(id: java.util.UUID, runId: java.util.UUID): PlanShape = {
     val cached = planInfo.get(runId)
     if (cached != null) cached
     else {
@@ -101,20 +100,11 @@ final class StreamingLineageListener private (
             sess <- Option(session.get())
             query <- Option(sess.streams.get(id))
             exec <- lastExecution(query)
-          } yield {
-            // the analyzed plan is the WriteToStream node (no output
-            // attributes); lineage reads the query body beneath it,
-            // exactly like the batch listener
-            val body = PlanExtractor.queryBody(exec.analyzed)
-            PlanInfo(
-              body.output.map(_.name),
-              ColumnLineage.forPlan(exec.analyzed),
-              graft.meta.MetadataExtractor.schemaFingerprint(body.schema))
-          }
-        } catch { case _: Throwable => None }
+          } yield PlanShape.of(exec.analyzed)
+        } catch { case NonFatal(_) => None }
       computed match {
         case Some(info) => planInfo.put(runId, info); info
-        case None => PlanInfo(Nil, Nil, "")
+        case None => PlanShape.empty
       }
     }
   }
@@ -150,6 +140,6 @@ final class StreamingLineageListener private (
   private def safeEmit(r: => LineageRecord): Unit =
     try {
       val rec = r
-      sinks.foreach(s => try s.emit(rec) catch { case _: Throwable => () })
-    } catch { case _: Throwable => () }
+      sinks.foreach(s => try s.emit(rec) catch { case NonFatal(_) => () })
+    } catch { case NonFatal(_) => () }
 }

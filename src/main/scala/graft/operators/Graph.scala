@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * Scale design: the graph lives in DataFrames (edges from one
   * fact-table aggregate); each PageRank round is ONE equality join
   * (edge src → rank) + one map-side-combinable aggregate on dst — the
-  * standard distributed PageRank shape, unrolled PR_ITERS times in a
-  * single plan. Per-round ranks are ROUNDED to 9dp so cross-engine
-  * double drift cannot compound across rounds (the Lloyd/probe pin);
-  * transition probabilities w/outw are exact integer-ratio doubles.
+  * standard distributed PageRank shape, run PR_ITERS times with each
+  * round's ranks checkpointed. Per-round ranks are ROUNDED to 9dp so
+  * cross-engine double drift cannot compound across rounds (the
+  * Lloyd/probe pin); transition probabilities w/outw are exact
+  * integer-ratio doubles.
   */
 object Graph {
 
@@ -26,8 +27,58 @@ object Graph {
     * exist only at the output edge, and the (custkey,suppkey)↔node map
     * is a bijection so every count, weight and rounding is
     * bit-identical). */
-  private def nodeStr(k: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def nodeStr(k: Column): Column =
     concat(when(k % 2 === 0, lit("c")).otherwise(lit("s")), shiftright(k, 1))
+
+  /** The parity-coded (cnode, snode) long keys of a trading pair. */
+  private def parityNodes: Seq[Column] =
+    Seq((col("ck") * 2).as("cnode"), (col("sk") * 2 + 1).as("snode"))
+
+  /** Trading pairs of the customer↔supplier graph, (ck, sk, w = lineitem
+    * count): the one fact aggregate every trade-graph query starts from.
+    * It groups the raw integer keys, so the lineitem-scale map-side
+    * hash-agg keys 16 bytes, and callers build their node keys (parity
+    * longs or `c`/`s` strings) AFTER the groupBy, at pair scale instead
+    * of per lineitem row (guide §2.3: narrower keys through the
+    * corpus-scale exchange). */
+  private def tradePairs(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
+      .groupBy("ck", "sk").agg(count(lit(1)).as("w"))
+
+  /** The thresholded graph's pairs: at least KCORE_T lineitems (the
+    * weight threshold gives the k-core peel its cascade). */
+  private def strongPairs(s: SparkSession, dir: String): DataFrame =
+    tradePairs(s, dir).filter(col("w") >= KCORE_T)
+
+  /** Both directions of every (cnode, snode, rest...) pair as
+    * (src, dst, rest...) — symmetric, so every node has in- and
+    * out-edges. localCheckpoint (eager) instead of cache: every round of
+    * an iterate references the edges under new broadcasts, and a
+    * cached-but-lazy plan made each round's broadcast re-plan the whole
+    * upstream lineage. */
+  private def symmetricEdges(pairs: DataFrame): DataFrame = {
+    val rest = pairs.columns.toSeq.filterNot(Set("cnode", "snode")).map(col)
+    def way(from: String, to: String): DataFrame =
+      pairs.select(col(from).as("src") +: col(to).as("dst") +: rest: _*)
+    way("cnode", "snode").unionByName(way("snode", "cnode")).localCheckpoint()
+  }
+
+  /** The thresholded trade graph on parity-coded long nodes — the graph
+    * of q_kcore, q_graph_bfs and q_closeness_sample. Their censuses need
+    * only a node's SIDE, which is the key's parity. */
+  private def strongEdges(s: SparkSession, dir: String): DataFrame =
+    symmetricEdges(strongPairs(s, dir).select(parityNodes: _*))
+
+  /** Customer / supplier counts over parity-coded long nodes `v`: the
+    * side of a node is its key's parity. */
+  private def nCust: Column = sum(when(col("v") % 2 === 0, 1L).otherwise(0L))
+  private def nSupp: Column = sum(when(col("v") % 2 =!= 0, 1L).otherwise(0L))
+
+  /** Vertex set `v` of a symmetric edge frame. */
+  private def vertices(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("v")).distinct()
 
   private[graft] val PR_ITERS = 3
   private val PR_D     = "0.85" // damping, literal text shared with the oracle
@@ -50,120 +101,84 @@ object Graph {
   private[graft] def pagerankAll(s: SparkSession, dir: String): DataFrame =
     pagerankRounds(s, dir, PR_ITERS)
 
-  /** The rank frame after exactly `iters` rounds of the gauge's
-    * recurrence — [[pageRankConverged]]'s fixpoint spec replays it. */
-  private[graft] def pagerankRounds(s: SparkSession, dir: String, iters: Int): DataFrame = {
-    // r14 long-key iterate (the q_hits discipline, guide §2.3): the fact
-    // aggregate groups on the raw integer keys — the lineitem-scale
-    // map-side hash-agg keys 16 bytes instead of two strings and the
-    // per-fact-row concat disappears — and the iterate joins/aggregates
-    // parity-coded longs (custkey·2 / suppkey·2+1; the two sides SHARE
-    // the src/dst columns, so parity keeps them apart). Node strings are
-    // rebuilt only in the final select ([[nodeStr]] bijection), so every
-    // group, weight and 9dp rounding is bit-identical to the string form.
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-      .groupBy("ck", "sk").agg(count(lit(1)).cast("double").as("w"))
-      .select((col("ck") * 2).as("cnode"), (col("sk") * 2 + 1).as("snode"), col("w"))
-    // localCheckpoint (eager) instead of cache: every round references
-    // these frames under new broadcasts, and a cached-but-lazy plan made
-    // each round's broadcast re-plan the whole upstream lineage
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"), col("w"))
-      .unionByName(pairs.select(col("snode").as("src"), col("cnode").as("dst"), col("w")))
-      .localCheckpoint()
-    val outw = edges.groupBy("src").agg(sum("w").as("outw"))
-    val trans = edges.join(outw, "src")
-      .select(col("src"), col("dst"), (col("w") / col("outw")).as("p"))
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("node")).distinct().localCheckpoint()
-    val nN = nodes.agg(count(lit(1)).cast("double").as("n"))
-    var pr = nodes.crossJoin(broadcast(nN))
-      .select(col("node"), round(lit(1.0) / col("n"), 9).as("pr"), col("n"))
-    for (_ <- 1 to iters) {
-      // rank and inflow frames are VERTEX-sized: small enough that AQE
-      // broadcasts them on the base data, too big to FORCE — the r11
-      // 10x sweep measured the explicit hints collecting a 1.6M-row
-      // vertex frame to the driver ten times (34 s); unhinted, AQE
-      // broadcasts under its size threshold and shuffle-joins past it,
-      // the correct call at every scale.
+  /** PageRank's fixed frames over the weighted trade graph on
+    * parity-coded long nodes — `trans` (src, dst, p = w/outw, exact
+    * integer-ratio doubles) and the 1-row node count `nN` — and the
+    * uniform starting ranks `pr0` (node, pr, n). Node strings are rebuilt
+    * only by [[rankFrame]], so every group, weight and 9dp rounding is
+    * bit-identical to the string form. */
+  private final case class PrGraph(trans: DataFrame, nN: DataFrame, pr0: DataFrame) {
+
+    /** One round: ONE equi-join (edge src → rank) + one
+      * map-side-combinable aggregate on dst, ranks rounded to 9dp. The
+      * rank and inflow frames are VERTEX-sized: small enough that AQE
+      * broadcasts them on the base data, too big to FORCE — the r11 10x
+      * sweep measured explicit hints collecting a 1.6M-row vertex frame
+      * to the driver ten times (34 s); unhinted, AQE broadcasts under its
+      * size threshold and shuffle-joins past it. The edge set is
+      * SYMMETRIC, so `inflow` already covers every node (no per-round
+      * LEFT JOIN against the vertex set; the coalesce guards the
+      * impossible no-inflow row). Each round is checkpointed: without it
+      * round r's broadcast plan nests round r-1's and every
+      * materialization replays the whole chain — 63 s at sf1 vs ~10 s. */
+    def step(pr: DataFrame): DataFrame = {
       val inflow = trans.join(pr.select(col("node").as("src"), col("pr")), "src")
         .groupBy("dst").agg(sum(col("pr") * col("p")).as("inflow"))
-      // checkpoint each round (qLabelProp/qHits discipline): without it,
-      // round r's broadcast plan nests round r-1's broadcast and every
-      // materialization replays the whole chain — 63 s at sf1 vs ~10 s
-      // for the checkpointed iterators on the same graph.
-      // The edge set is SYMMETRIC (both directions unioned), so every
-      // node has in-edges and `inflow` already covers the full vertex
-      // set — the old per-round LEFT JOIN against `nodes` re-shuffled a
-      // vertex frame each round only to re-attach rows that were all
-      // already there (guide §2.4: remove the no-op shuffle). The
-      // coalesce stays as belt-and-braces for the (impossible here)
-      // no-inflow row; arithmetic is unchanged, ranks bit-identical.
-      pr = inflow.crossJoin(broadcast(nN))
+      inflow.crossJoin(broadcast(nN))
         .select(col("dst").as("node"),
           round(expr(PR_BASE) / col("n") +
             expr(PR_D) * coalesce(col("inflow"), lit(0.0)), 9).as("pr"),
           col("n"))
         .localCheckpoint()
     }
-    // strings only at the output edge (consumers order/tie-break on the
-    // node STRING, so it must exist before any orderBy downstream)
-    pr.select(nodeStr(col("node")).as("node"), col("pr"), col("n"))
   }
 
-  /** Tolerance-driven PageRank (r11 VERDICT item 6): the production
-    * variant of [[pagerankAll]] — same transition frame, same per-round
-    * arithmetic (9dp rounding, so round r here is BIT-IDENTICAL to the
-    * unrolled gauge's round r), but iterating until the largest
-    * per-node rank change falls below `eps` instead of a fixed unroll.
-    * Returns the final rank frame, the number of rounds executed, and
-    * whether the tolerance was met before `maxRounds` (a `false` flag
-    * is reported, never silently truncated — the fixed-round gauges'
-    * honesty rule).
-    *
-    * Scale shape: identical to the gauge — per round ONE equi-join
-    * (AQE decides broadcast vs shuffle on the vertex-sized rank frame)
-    * + one map-side-combinable aggregate, localCheckpoint per round so
-    * round r's plan never replays rounds 1..r-1 (`ccLabels`'
-    * discipline). The convergence probe collects exactly ONE double per
-    * round (the max |Δpr| aggregate), never the rank frame.
-    */
-  def pageRankConverged(s: SparkSession, dir: String,
-      eps: Double = 1e-6, maxRounds: Int = 100): (DataFrame, Int, Boolean) = {
-    // long-key iterate, kept in LOCKSTEP with [[pagerankRounds]] (the
-    // fixpoint spec replays it round-for-round)
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-      .groupBy("ck", "sk").agg(count(lit(1)).cast("double").as("w"))
-      .select((col("ck") * 2).as("cnode"), (col("sk") * 2 + 1).as("snode"), col("w"))
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"), col("w"))
-      .unionByName(pairs.select(col("snode").as("src"), col("cnode").as("dst"), col("w")))
-      .localCheckpoint()
+  private def prGraph(s: SparkSession, dir: String): PrGraph = {
+    val edges = symmetricEdges(tradePairs(s, dir)
+      .select(parityNodes :+ col("w").cast("double").as("w"): _*))
     val outw = edges.groupBy("src").agg(sum("w").as("outw"))
     val trans = edges.join(outw, "src")
       .select(col("src"), col("dst"), (col("w") / col("outw")).as("p"))
       .localCheckpoint()
-    val nodes = edges.select(col("src").as("node")).distinct().localCheckpoint()
+    val nodes = vertices(edges).select(col("v").as("node")).localCheckpoint()
     val nN = nodes.agg(count(lit(1)).cast("double").as("n"))
-    var pr = nodes.crossJoin(broadcast(nN))
-      .select(col("node"), round(lit(1.0) / col("n"), 9).as("pr"), col("n"))
-      .localCheckpoint()
+    PrGraph(trans, nN, nodes.crossJoin(broadcast(nN))
+      .select(col("node"), round(lit(1.0) / col("n"), 9).as("pr"), col("n")))
+  }
+
+  /** The (node, pr, n) output frame: node strings only at the output
+    * edge (consumers order/tie-break on the node STRING, so it must
+    * exist before any orderBy downstream). */
+  private def rankFrame(pr: DataFrame): DataFrame =
+    pr.select(nodeStr(col("node")).as("node"), col("pr"), col("n"))
+
+  /** The rank frame after exactly `iters` rounds of the gauge's
+    * recurrence — [[pageRankConverged]]'s fixpoint spec replays it. */
+  private[graft] def pagerankRounds(s: SparkSession, dir: String, iters: Int): DataFrame = {
+    val g = prGraph(s, dir)
+    rankFrame((1 to iters).foldLeft(g.pr0)((pr, _) => g.step(pr)))
+  }
+
+  /** Tolerance-driven PageRank (r11 VERDICT item 6): the production
+    * variant of [[pagerankAll]] — the same frames and the same round
+    * step (so round r here is BIT-IDENTICAL to the unrolled gauge's
+    * round r), but iterating until the largest per-node rank change
+    * falls below `eps` instead of a fixed unroll. Returns the final rank
+    * frame, the number of rounds executed, and whether the tolerance was
+    * met before `maxRounds` (a `false` flag is reported, never silently
+    * truncated — the fixed-round gauges' honesty rule). The convergence
+    * probe collects exactly ONE double per round (the max |Δpr|
+    * aggregate), never the rank frame.
+    */
+  def pageRankConverged(s: SparkSession, dir: String,
+      eps: Double = 1e-6, maxRounds: Int = 100): (DataFrame, Int, Boolean) = {
+    val g = prGraph(s, dir)
+    // checkpointed: the first round's step and its delta both read it
+    var pr = g.pr0.localCheckpoint()
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val inflow = trans.join(pr.select(col("node").as("src"), col("pr")), "src")
-        .groupBy("dst").agg(sum(col("pr") * col("p")).as("inflow"))
-      // symmetric edges ⇒ inflow covers every node; no per-round nodes
-      // join (the qPagerank/pagerankRounds shape — kept in lockstep so
-      // round r here stays BIT-IDENTICAL to the unrolled gauge's round r)
-      val next = inflow.crossJoin(broadcast(nN))
-        .select(col("dst").as("node"),
-          round(expr(PR_BASE) / col("n") +
-            expr(PR_D) * coalesce(col("inflow"), lit(0.0)), 9).as("pr"),
-          col("n"))
-        .localCheckpoint()
+      val next = g.step(pr)
       // one scalar to the driver: the L-infinity step size
       val delta = next.join(pr.select(col("node"), col("pr").as("prev")), "node")
         .agg(max(abs(col("pr") - col("prev"))).as("d"))
@@ -172,7 +187,7 @@ object Graph {
       rounds += 1
       converged = delta < eps
     }
-    (pr.select(nodeStr(col("node")).as("node"), col("pr"), col("n")), rounds, converged)
+    (rankFrame(pr), rounds, converged)
   }
 
   val oraclePagerank: String = {
@@ -221,6 +236,25 @@ object Graph {
     * transitivity ratio is one rounded division.
     */
   def qGraphTriangles(s: SparkSession, dir: String): DataFrame = {
+    val edges = nationEdges(s, dir)
+    val tri = triangles(edges).agg(count(lit(1)).as("n_triangles"))
+    val summary = nationDegrees(edges).agg(count(lit(1)).as("n_nodes"),
+      (sum("d") / 2).cast("long").as("n_edges"),
+      sum(col("d") * (col("d") - 1) / 2).cast("long").as("n_triads"))
+    summary.crossJoin(broadcast(tri))
+      .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
+        round(lit(3.0) * col("n_triangles") / col("n_triads"), 6).as("transitivity"))
+  }
+
+  /** The thresholded inter-nation trade graph of `q_graph_triangles`,
+    * `q_link_predict` and `q_local_clustering`: one undirected edge (a, b),
+    * a < b, per nation pair whose lineitem count is at least the mean
+    * pair count. Both frames are bounded (≤|nations|² rows) and
+    * checkpointed: the pair counts because the mean aggregate AND the
+    * threshold filter read them (lazily the 4-way fact join ran TWICE
+    * per query, once under the broadcast 1-row mean, once on the filter
+    * side), the edges because every consumer reads them 4-5 times. */
+  private def nationEdges(s: SparkSession, dir: String): DataFrame = {
     val pairs = Tables.lineitem(s, dir)
       .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
       .join(Tables.dim(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
@@ -229,30 +263,26 @@ object Graph {
       .select(least(col("c_nationkey"), col("s_nationkey")).as("a"),
         greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("w"))
-      // checkpointed (bounded ≤|nations]² rows): the mean-weight
-      // aggregate AND the threshold filter both read it — lazily the
-      // 4-way fact join ran TWICE per query (once under the broadcast
-      // 1-row mean, once on the filter side)
       .localCheckpoint()
     val meanW = pairs.agg(avg("w").as("mean_w"))
-    val edges = pairs.crossJoin(broadcast(meanW))
+    pairs.crossJoin(broadcast(meanW))
       .filter(col("w") >= col("mean_w"))
       .select("a", "b")
-      .localCheckpoint() // bounded (≤|nations|² rows); reused 5×
-    val deg = edges.select(col("a").as("v")).unionByName(edges.select(col("b").as("v")))
+      .localCheckpoint()
+  }
+
+  /** Degree (v, d) of every node of a nation edge frame. */
+  private def nationDegrees(edges: DataFrame): DataFrame =
+    edges.select(col("a").as("v")).unionByName(edges.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
-    val tri = edges.as("ab")
+
+  /** Every triangle (a, b, c), a < b < c, of a nation edge frame, once. */
+  private def triangles(edges: DataFrame): DataFrame =
+    edges.as("ab")
       .join(edges.as("bc"), col("ab.b") === col("bc.a"))
       .join(edges.as("ac"),
         col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
-      .agg(count(lit(1)).as("n_triangles"))
-    val summary = deg.agg(count(lit(1)).as("n_nodes"),
-      (sum("d") / 2).cast("long").as("n_edges"),
-      sum(col("d") * (col("d") - 1) / 2).cast("long").as("n_triads"))
-    summary.crossJoin(broadcast(tri))
-      .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
-        round(lit(3.0) * col("n_triangles") / col("n_triads"), 6).as("transitivity"))
-  }
+      .select(col("ab.a").as("a"), col("ab.b").as("b"), col("bc.b").as("c"))
 
   val oracleGraphTriangles: String =
     """WITH ord AS MATERIALIZED (
@@ -322,27 +352,13 @@ object Graph {
     * never leaves the executors.
     */
   def qKcore(s: SparkSession, dir: String): DataFrame = {
-    // r14 long-key peel: the fact aggregate groups raw integer keys, the
-    // peel joins parity-coded longs (custkey·2 / suppkey·2+1), and node
-    // strings never exist — the census only needs the SIDE, which is the
-    // key's parity. Bijection ⇒ identical pair set, degrees and counts.
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-      .groupBy("ck", "sk").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KCORE_T)
-      .select((col("ck") * 2).as("cnode"), (col("sk") * 2 + 1).as("snode"))
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
-      .unionByName(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
-      .localCheckpoint()
+    val edges = strongEdges(s, dir)
     def census(alive: DataFrame, round: Int): DataFrame =
-      alive.agg(
-        sum(when(col("v") % 2 === 0, 1L).otherwise(0L)).as("n_alive_cust"),
-        sum(when(col("v") % 2 =!= 0, 1L).otherwise(0L)).as("n_alive_supp"))
+      alive.agg(nCust.as("n_alive_cust"), nSupp.as("n_alive_supp"))
         .select(lit(round).as("peel_round"),
           coalesce(col("n_alive_cust"), lit(0L)).as("n_alive_cust"),
           coalesce(col("n_alive_supp"), lit(0L)).as("n_alive_supp"))
-    var alive = edges.select(col("src").as("v")).distinct().localCheckpoint()
+    var alive = vertices(edges).localCheckpoint()
     var rounds = Seq(census(alive, 0))
     for (r <- 1 to KCORE_ROUNDS) {
       val deg = edges
@@ -430,20 +446,8 @@ object Graph {
     * (`min(d)` per vertex = BFS distance, depth-capped).
     */
   def qGraphBfs(s: SparkSession, dir: String): DataFrame = {
-    // r14 long-key frontier sweep (qKcore discipline): parity-coded long
-    // nodes end-to-end — the census needs only the key's parity, so node
-    // strings never exist anywhere in this query. Bijection ⇒ identical
-    // reach sets and counts.
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-      .groupBy("ck", "sk").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KCORE_T)
-      .select((col("ck") * 2).as("cnode"), (col("sk") * 2 + 1).as("snode"))
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
-      .unionByName(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("v")).distinct().localCheckpoint()
+    val edges = strongEdges(s, dir)
+    val nodes = vertices(edges).localCheckpoint()
     // seed frame: one nation's customers — dim-bounded, but still
     // vertex-keyed, so no forced hint (AQE broadcasts it on its own)
     val seeds = nodes.join(
@@ -468,12 +472,9 @@ object Graph {
       dist = dist.unionByName(next)
       frontier = next.select("v")
     }
-    val reached = dist.groupBy("hop").agg(
-      sum(when(col("v") % 2 === 0, 1L).otherwise(0L)).as("n_cust"),
-      sum(when(col("v") % 2 =!= 0, 1L).otherwise(0L)).as("n_supp"))
+    val reached = dist.groupBy("hop").agg(nCust.as("n_cust"), nSupp.as("n_supp"))
     val unreached = nodes.join(dist.select("v"), Seq("v"), "left_anti")
-      .agg(coalesce(sum(when(col("v") % 2 === 0, 1L).otherwise(0L)), lit(0L)).as("n_cust"),
-        coalesce(sum(when(col("v") % 2 =!= 0, 1L).otherwise(0L)), lit(0L)).as("n_supp"))
+      .agg(coalesce(nCust, lit(0L)).as("n_cust"), coalesce(nSupp, lit(0L)).as("n_supp"))
       .select(lit(-1).as("hop"), col("n_cust"), col("n_supp"))
     reached.unionByName(unreached)
       .select(col("hop"), col("n_cust"), col("n_supp"),
@@ -483,60 +484,57 @@ object Graph {
 
   private val LPA_ROUNDS = 3
 
-  /** Synchronous label-propagation community detection (`q_label_prop`)
-    * on the thresholded trade graph: every node starts as its own
-    * community and each round adopts the label most frequent among its
-    * neighbors, ties broken by MIN label — fully deterministic, so both
-    * engines converge identically round by round. Output is the
-    * per-round community census (communities, largest size,
-    * singletons): how fast the market coalesces into trading blocs.
+  /** Synchronous label propagation over the thresholded trade graph —
+    * shared by [[qLabelProp]] and [[qGraphModularity]]. Every node starts
+    * as its own community and each round adopts the label most frequent
+    * among its neighbors, ties broken by MIN label — fully deterministic,
+    * so both engines converge identically round by round. Returns the
+    * edges and the (v, label) frame after each round, round 0 first.
+    *
+    * Nodes are `c<id>`/`s<id>` STRINGS: the MIN-label tie-break is a
+    * string ordering, so long keys would change results (the strings are
+    * built after [[tradePairs]]' groupBy, at pair scale).
     *
     * Scale shape: one round = edges⨝labels (label frame vertex-sized,
     * so NO broadcast hint — AQE picks broadcast at dim scale, shuffle
-    * at web scale) + TWO map-side-
-    * combinable hash-aggs — the per-(node, neighbor-label) count, then
-    * the deterministic argmax as `min(struct(-cnt, label))` (max count,
-    * then min label) with NO window over the neighbor stream. Fixed
-    * `LPA_ROUNDS` unroll, per-round `localCheckpoint`; only the
-    * bounded census leaves the executors.
+    * at web scale) + TWO map-side-combinable hash-aggs — the per-(node,
+    * neighbor-label) count, then the deterministic argmax as
+    * `min(struct(-cnt, label))` (max count, then min label) with NO
+    * window over the neighbor stream. Fixed `LPA_ROUNDS` unroll, each
+    * round's labels `localCheckpoint`ed.
     */
-  def qLabelProp(s: SparkSession, dir: String): DataFrame = {
-    // The ITERATE stays on string labels — the MIN-label tie-break is a
-    // STRING ordering, so long keys would change results — but the fact
-    // aggregate groups raw integer keys and builds the strings AFTER the
-    // groupBy, at quotient-pair scale instead of per lineitem row
-    // (bijection ⇒ identical pairs and counts; guide §2.3 narrower keys
-    // through the corpus-scale exchange).
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-      .groupBy("ck", "sk").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KCORE_T)
+  private def labelRounds(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
+    val edges = symmetricEdges(strongPairs(s, dir)
       .select(concat(lit("c"), col("ck")).as("cnode"),
-        concat(lit("s"), col("sk")).as("snode"))
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
-      .unionByName(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
-      .localCheckpoint()
-    def census(labels: DataFrame, round: Int): DataFrame =
-      labels.groupBy("label").agg(count(lit(1)).as("sz"))
-        .agg(count(lit(1)).as("n_comms"), max("sz").as("max_size"),
-          sum((col("sz") === 1L).cast("long")).as("n_singletons"))
-        .select(lit(round).as("round"), col("n_comms"), col("max_size"),
-          col("n_singletons"))
-    var labels = edges.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("label")).localCheckpoint()
-    var rounds = Seq(census(labels, 0))
-    for (r <- 1 to LPA_ROUNDS) {
-      labels = edges
+        concat(lit("s"), col("sk")).as("snode")))
+    val l0 = vertices(edges).select(col("v"), col("v").as("label")).localCheckpoint()
+    val rounds = (1 to LPA_ROUNDS).scanLeft(l0) { (labels, _) =>
+      edges
         .join(labels.select(col("v").as("src"), col("label")), "src")
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst").as("v"))
         .agg(min(struct((col("cnt") * -1).as("nc"), col("label"))).as("m"))
         .select(col("v"), col("m.label").as("label"))
         .localCheckpoint()
-      rounds = rounds :+ census(labels, r)
     }
-    rounds.reduce(_.union(_)).orderBy("round")
+    (edges, rounds)
+  }
+
+  /** Label-propagation community detection (`q_label_prop`): the
+    * per-round community census (communities, largest size, singletons)
+    * of [[labelRounds]] — how fast the market coalesces into trading
+    * blocs. Only the bounded census leaves the executors.
+    */
+  def qLabelProp(s: SparkSession, dir: String): DataFrame = {
+    def census(labels: DataFrame, round: Int): DataFrame =
+      labels.groupBy("label").agg(count(lit(1)).as("sz"))
+        .agg(count(lit(1)).as("n_comms"), max("sz").as("max_size"),
+          sum((col("sz") === 1L).cast("long")).as("n_singletons"))
+        .select(lit(round).as("round"), col("n_comms"), col("max_size"),
+          col("n_singletons"))
+    labelRounds(s, dir)._2.zipWithIndex
+      .map { case (labels, r) => census(labels, r) }
+      .reduce(_.union(_)).orderBy("round")
   }
 
   private[graft] val HITS_ITERS = 3
@@ -569,10 +567,8 @@ object Graph {
     // so the (score DESC, node ASC) string tie-break is unchanged; the
     // (custkey,suppkey)↔(cnode,snode) map is a bijection, so every
     // weight, score and rounding is bit-identical.
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cnode"), col("l_suppkey").as("snode"))
-      .groupBy("cnode", "snode").agg(count(lit(1)).cast("double").as("w"))
+    val pairs = tradePairs(s, dir)
+      .select(col("ck").as("cnode"), col("sk").as("snode"), col("w").cast("double").as("w"))
       .localCheckpoint()
     var auth = pairs.select(col("snode")).distinct()
       .select(col("snode"), lit(1.0).as("a"))
@@ -656,36 +652,13 @@ object Graph {
     * arithmetic is one final expression — no order-dependent float
     * summation across communities.
     *
-    * Scale shape: same per-round discipline as qLabelProp (unhinted
-    * label join — AQE decides, the label frame is vertex-sized —
-    * localCheckpoint per round); the modularity pass is two hash
-    * aggregates over the |edges| frame onto |communities| then 1 row.
+    * Scale shape: the labels are [[labelRounds]]' last round; the
+    * modularity pass is two hash aggregates over the |edges| frame onto
+    * |communities| then 1 row.
     */
   def qGraphModularity(s: SparkSession, dir: String): DataFrame = {
-    // qLabelProp discipline: string labels in the iterate (MIN tie-break
-    // is string-ordered), raw-long fact aggregate with the concat moved
-    // AFTER the groupBy (quotient-pair scale, not per fact row).
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-      .groupBy("ck", "sk").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KCORE_T)
-      .select(concat(lit("c"), col("ck")).as("cnode"),
-        concat(lit("s"), col("sk")).as("snode"))
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
-      .unionByName(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("label")).localCheckpoint()
-    for (_ <- 1 to LPA_ROUNDS) {
-      labels = edges
-        .join(labels.select(col("v").as("src"), col("label")), "src")
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst").as("v"))
-        .agg(min(struct((col("cnt") * -1).as("nc"), col("label"))).as("m"))
-        .select(col("v"), col("m.label").as("label"))
-        .localCheckpoint()
-    }
+    val (edges, rounds) = labelRounds(s, dir)
+    val labels = rounds.last
     val ann = edges
       .join(labels.select(col("v").as("src"), col("label").as("slab")), "src")
       .join(labels.select(col("v").as("dst"), col("label").as("dlab")), "dst")
@@ -832,20 +805,7 @@ object Graph {
     * Jaccard is one division: cn / (deg(a)+deg(b)−cn), exact ints.
     */
   def qLinkPredict(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.dim(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(Tables.dim(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .filter(col("c_nationkey") =!= col("s_nationkey"))
-      .select(least(col("c_nationkey"), col("s_nationkey")).as("a"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("w"))
-      .localCheckpoint() // qGraphTriangles discipline: mean + filter both read it
-    val meanW = pairs.agg(avg("w").as("mean_w"))
-    val edges = pairs.crossJoin(broadcast(meanW))
-      .filter(col("w") >= col("mean_w"))
-      .select("a", "b")
-      .localCheckpoint() // bounded (≤|nations|² rows); reused 4×
+    val edges = nationEdges(s, dir)
     val und = edges.select(col("a").as("u"), col("b").as("v"))
       .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
     val deg = und.groupBy("u").agg(count(lit(1)).as("d"))
@@ -977,7 +937,7 @@ object Graph {
       .distinct()
     val cdeg = edges.groupBy("c").agg(count(lit(1)).as("dc"))
     val sdeg = edges.groupBy("p").agg(count(lit(1)).as("ds"))
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
+    val dec = (c: Column) => c.cast("decimal(38,0)")
     edges.join(cdeg, "c").join(sdeg, "p")
       .agg(
         count(lit(1)).as("n_edges"),
@@ -1030,29 +990,11 @@ object Graph {
     * frame, everything after runs on the bounded edge list.
     */
   def qLocalClustering(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.dim(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(Tables.dim(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-      .filter(col("c_nationkey") =!= col("s_nationkey"))
-      .select(least(col("c_nationkey"), col("s_nationkey")).as("a"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("w"))
-      .localCheckpoint() // qGraphTriangles discipline: mean + filter both read it
-    val meanW = pairs.agg(avg("w").as("mean_w"))
-    val edges = pairs.crossJoin(broadcast(meanW))
-      .filter(col("w") >= col("mean_w"))
-      .select("a", "b")
-      .localCheckpoint() // bounded (≤|nations|² rows); reused 4×
-    val deg = edges.select(col("a").as("v")).unionByName(edges.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-    val perNode = edges.as("ab")
-      .join(edges.as("bc"), col("ab.b") === col("bc.a"))
-      .join(edges.as("ac"),
-        col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
-      .select(explode(array(col("ab.a"), col("ab.b"), col("bc.b"))).as("v"))
+    val edges = nationEdges(s, dir)
+    val perNode = triangles(edges)
+      .select(explode(array(col("a"), col("b"), col("c"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("t"))
-    deg.join(perNode, Seq("v"), "left")
+    nationDegrees(edges).join(perNode, Seq("v"), "left")
       .select(col("v").cast("long").as("node"),
         col("d").cast("long").as("degree"),
         coalesce(col("t"), lit(0L)).as("triangles"),
@@ -1127,16 +1069,8 @@ object Graph {
     // (harmonic DESC, node ASC) string tie-break is unchanged. Source
     // selection order is preserved: key = custkey·2 is monotone in
     // custkey, so orderBy(key) picks the same CLOSE_SOURCES customers.
-    val pairs = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("ck"), col("l_suppkey").as("sk"))
-      .groupBy("ck", "sk").agg(count(lit(1)).as("w"))
-      .filter(col("w") >= KCORE_T)
-      .select((col("ck") * 2).as("cnode"), (col("sk") * 2 + 1).as("snode"))
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"))
-      .unionByName(pairs.select(col("snode").as("src"), col("cnode").as("dst")))
-      .localCheckpoint()
-    val sources = edges.select(col("src").as("v")).distinct()
+    val edges = strongEdges(s, dir)
+    val sources = vertices(edges)
       .filter(col("v") % 2 === 0)
       .orderBy("v").limit(CLOSE_SOURCES) // TakeOrdered: bounded driver-side
       .select(col("v").as("s0"))

@@ -151,17 +151,7 @@ object Similarity {
   private[graft] def lshCandidates(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val ws = planeWeights
-    val bandCols = (0 until BANDS).map { b =>
-      val bv = (0 until BITS).map { i =>
-        val w = array(ws(b * BITS + i).map(lit): _*)
-        when(dot(col("emb"), w) > 0, 1 << i).otherwise(0)
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), bv.as("bv"))
-    }
-    val bands = e
-      .select(col("vec_id"), explode(array(bandCols: _*)).as("bd"))
-      .select(col("vec_id"), col("bd.band").as("band"), col("bd.bv").as("bv"))
+    val bands = lshBands(e, "vec_id")
     val pairs = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
           col("x.vec_id") =!= col("y.vec_id"))
@@ -172,6 +162,22 @@ object Similarity {
       .join(e.select(col("vec_id").as("cand_id"), col("emb").as("y_emb")), "cand_id")
       .select(col("vec_id"), col("cand_id"),
         cosine(s, "x_emb", "y_emb").as("cos"))
+  }
+
+  /** The BANDS LSH signatures of every `emb` row of `e`, exploded to
+    * (id, band, bv) rows: bv packs the BITS random-hyperplane sign bits
+    * of that band. */
+  private def lshBands(e: DataFrame, id: String): DataFrame = {
+    val ws = planeWeights
+    val bandCols = (0 until BANDS).map { b =>
+      val bv = (0 until BITS).map { i =>
+        val w = array(ws(b * BITS + i).map(lit): _*)
+        when(dot(col("emb"), w) > 0, 1 << i).otherwise(0)
+      }.reduce(_ + _)
+      struct(lit(b).as("band"), bv.as("bv"))
+    }
+    e.select(col(id), explode(array(bandCols: _*)).as("bd"))
+      .select(col(id), col("bd.band").as("band"), col("bd.bv").as("bv"))
   }
 
   /** DuckDB mirror of [[lshCandidates]] as CTEs ending in `cand`. */
@@ -225,17 +231,7 @@ object Similarity {
       .select(col("emb"), col("mk.ids").as("own_ids"), col("m"),
         col("mk.ids")(0).as("rep"))
       .cache()
-    val ws = planeWeights
-    val bandCols = (0 until BANDS).map { b =>
-      val bv = (0 until BITS).map { i =>
-        val w = array(ws(b * BITS + i).map(lit): _*)
-        when(dot(col("emb"), w) > 0, 1 << i).otherwise(0)
-      }.reduce(_ + _)
-      struct(lit(b).as("band"), bv.as("bv"))
-    }
-    val bands = reps
-      .select(col("rep"), explode(array(bandCols: _*)).as("bd"))
-      .select(col("rep"), col("bd.band").as("band"), col("bd.bv").as("bv"))
+    val bands = lshBands(reps, "rep")
     val repPairs = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
           col("x.rep") =!= col("y.rep"))
@@ -1191,7 +1187,8 @@ object Similarity {
     * embeddings" a curation stack trains for domain/quality routing when
     * a full classifier is too expensive.
     *
-    * Training runs IN-PLAN: each step is one scan of the (cached)
+    * The weights are the shared [[probeWeightsFor]] artifact, trained
+    * IN-PLAN by [[probeWeights]]: each step is one scan of the
     * feature frame — per-row margin d = σ(w·x) − y, posexplode to
     * (pos, d·x_j), one map-side-combinable avg per coordinate, and the
     * 65-long weight vector is rebuilt by a sorted collect_list (the
@@ -1209,22 +1206,7 @@ object Similarity {
       .select(col("label"),
         when(col("label") < 5, 1.0).otherwise(0.0).as("y"),
         probeX.as("x"))
-      .cache()
-    var w = s.range(1).select(
-      transform(sequence(lit(1), lit(1 + DIM)), _ => lit(0.0)).as("w"))
-    for (_ <- 1 to PROBE_ITERS) {
-      val d = lit(1.0) / (lit(1.0) + exp(-dot(col("x"), col("w")))) - col("y")
-      w = feat.crossJoin(broadcast(w))
-        .select(d.as("d"), col("x"), col("w"))
-        .select(col("d"), posexplode(col("x")).as(Seq("pos", "v")), col("w"))
-        .groupBy("pos")
-        .agg(round(
-          element_at(first("w"), col("pos") + 1) - expr(PROBE_LR) * avg(col("d") * col("v")),
-          6).as("wj"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("wj")))),
-          x => x.getField("wj")).as("w"))
-    }
-    feat.crossJoin(broadcast(w))
+    feat.crossJoin(broadcast(probeWeightsFor(s, dir)))
       .select(col("label"), col("y"), (dot(col("x"), col("w")) > 0.0).cast("double").as("pred"))
       .groupBy("label")
       .agg(count(lit(1)).as("n"),
@@ -1233,7 +1215,7 @@ object Similarity {
       .orderBy("label")
   }
 
-  /** Final trained weight frame — exposed for the probe spec. */
+  /** Final trained weight frame: PROBE_ITERS gradient-descent steps. */
   private[graft] def probeWeights(s: SparkSession, dir: String): DataFrame = {
     val feat = Tables.embeddings(s, dir)
       .select(when(col("label") < 5, 1.0).otherwise(0.0).as("y"), probeX.as("x"))
@@ -1259,11 +1241,11 @@ object Similarity {
   private[graft] val probeRuns = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The trained probe weights over `dir`, a [[SharedArtifacts]] entry
-    * shared by the six registry queries that score the corpus with the
-    * same probe (q_auc_probe, q_calibration, q_label_noise,
-    * q_uncertainty_sample, q_gains_curve, q_ipw_effect). The GD
-    * recurrence and its 6dp-per-step rounding are unchanged, so the
-    * weights are bit-identical to a fresh [[probeWeights]] run. */
+    * shared by the seven registry queries that score the corpus with the
+    * same probe (q_embedding_probe, q_auc_probe, q_calibration,
+    * q_label_noise, q_uncertainty_sample, q_gains_curve, q_ipw_effect).
+    * The GD recurrence and its 6dp-per-step rounding are unchanged, so
+    * the weights are bit-identical to a fresh [[probeWeights]] run. */
   private[graft] def probeWeightsFor(s: SparkSession, dir: String): DataFrame =
     SharedArtifacts(s, "probe_weights", dir, "embeddings") {
       probeRuns.incrementAndGet()

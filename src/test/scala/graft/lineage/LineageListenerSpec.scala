@@ -137,6 +137,30 @@ class LineageListenerSpec extends AnyFunSpec with SparkTestBase {
       } finally Lineage.uninstall(spark, l)
     }
 
+    it("names a self-joined file once, with both sides' columns and the scans' total bytes") {
+      val sink = new InMemorySink
+      val l = Lineage.installSync(spark, sink)
+      try withTempDir { dir =>
+        val out = s"${dir.getAbsolutePath}/self"
+        val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+        orders.select(col("o_orderkey"), col("o_custkey"))
+          .join(orders.select(col("o_orderkey"), col("o_totalprice")), "o_orderkey")
+          .write.mode("overwrite").parquet(out)
+
+        assert(eventually()(sink.records.exists(_.output.isDefined)), "no write record")
+        val rec = sink.records.find(_.output.isDefined).get
+        assert(rec.inputs.map(_.name).count(_.contains("orders.parquet")) == 1,
+          s"orders named more than once: ${rec.inputs.map(_.name)}")
+        assert(rec.inputs.size == 1)
+        val in = rec.inputs.head
+        assert(in.columnsRead == Seq("o_orderkey", "o_custkey", "o_totalprice"),
+          s"columnsRead=${in.columnsRead}")
+        // both scans' stats land on the one entry, once
+        assert(in.bytesRead.exists(_ > 0L) && in.bytesRead == rec.bytesRead,
+          s"input bytesRead=${in.bytesRead} record bytesRead=${rec.bytesRead}")
+      } finally Lineage.uninstall(spark, l)
+    }
+
     it("aggregates executor metrics: shuffle bytes on an exchange plan, null on scan-only") {
       val sink = new InMemorySink
       val l = Lineage.installSync(spark, sink)
