@@ -1,109 +1,60 @@
 package graft.lineage
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{array, coalesce, lit, struct, transform, when}
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 /** Loader for persisted lineage: reads [[JsonlFileSink]] output back into
   * [[LineageRecord]]s so [[LineageGraph]] impact analysis runs over a
   * catalog that OUTLIVES the session that emitted it (the r7/r8 gap: the
   * graph only accepted the in-memory `Seq`).
   *
-  * The parse is Spark's own JSON reader under the EXPLICIT record schema
-  * below (schema inference on a catalog file is a wasted second pass, and
-  * a malformed line must surface as a null-status row, not silently skew
-  * the graph) — so a multi-gigabyte catalog of millions of runs loads as
+  * The parse is Spark's own JSON reader under an EXPLICIT schema taken
+  * from the [[LineageRecord]] case classes (schema inference on a
+  * catalog file is a wasted second pass, and a malformed line must
+  * surface as a null-status row, not silently skew the graph) — so a multi-gigabyte catalog of millions of runs loads as
   * a distributed scan, and `edgesDf` keeps the whole impact pipeline in
   * DataFrames with no driver materialization. `load` collects to the
   * driver only for the existing Seq-shaped API.
   */
 object LineageCatalog {
 
-  /** Schema of one toJson line — field-for-field with [[LineageRecord]]. */
-  val schema: StructType = StructType(Seq(
-    StructField("appId", StringType), StructField("appName", StringType),
-    StructField("user", StringType), StructField("funcName", StringType),
-    StructField("status", StringType), StructField("error", StringType),
-    StructField("durationNs", LongType), StructField("timestampMs", LongType),
-    StructField("inputs", ArrayType(StructType(Seq(
-      StructField("kind", StringType), StructField("name", StringType),
-      StructField("format", StringType),
-      StructField("columnsRead", ArrayType(StringType)),
-      StructField("bytesRead", LongType), StructField("rowsRead", LongType),
-      StructField("partitionFilters", ArrayType(StringType)),
-      StructField("partitionsRead", LongType))))),
-    StructField("output", StructType(Seq(
-      StructField("kind", StringType), StructField("name", StringType),
-      StructField("format", StringType), StructField("mode", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("staticPartitions", ArrayType(StringType)),
-      StructField("partitionsWritten", LongType)))),
-    StructField("outputColumns", ArrayType(StringType)),
-    StructField("columnLineage", ArrayType(StructType(Seq(
-      StructField("output", StringType),
-      StructField("sources", ArrayType(StringType)),
-      StructField("expression", StringType))))),
-    StructField("schemaFingerprint", StringType),
-    StructField("rowsWritten", LongType), StructField("bytesWritten", LongType),
-    StructField("bytesRead", LongType),
-    StructField("shuffleBytesWritten", LongType), StructField("shuffleBytesRead", LongType),
-    StructField("peakMemoryBytes", LongType), StructField("spillBytes", LongType),
-    StructField("planFingerprint", StringType),
-    StructField("queryText", StringType),
-    StructField("observed", ArrayType(StructType(Seq(
-      StructField("name", StringType), StructField("value", StringType)))))))
+  private val encoder = Encoders.product[LineageRecord]
+
+  /** Schema of one toJson line: the record encoder's schema, every field
+    * nullable so a line missing a key still reads. */
+  val schema: StructType = org.apache.spark.sql.GraftBridge.asNullable(encoder.schema)
 
   /** The catalog as a DataFrame — the scale path for big catalogs. */
   def loadDf(s: SparkSession, path: String): DataFrame =
     s.read.schema(schema).json(path)
 
-  /** The catalog as records — the [[LineageGraph]] Seq-shaped API. */
-  def load(s: SparkSession, path: String): Seq[LineageRecord] =
-    loadDf(s, path).collect().toSeq.map(rowToRecord)
+  /** The catalog as records — the [[LineageGraph]] Seq-shaped API. A
+    * malformed line loads as a null-status record; what a line lacks
+    * loads as its type's empty value (below). */
+  def load(s: SparkSession, path: String): Seq[LineageRecord] = {
+    val df = loadDf(s, path)
+    df.select(filledFields(encoder.schema, df(_)): _*).as(encoder).collect().toSeq
+  }
 
-  private def optStr(r: Row, f: String): Option[String] =
-    Option(r.getAs[String](f))
-  private def optLong(r: Row, f: String): Option[Long] =
-    if (r.isNullAt(r.fieldIndex(f))) None else Some(r.getAs[Long](f))
-  private def seqOf[T](r: Row, f: String): Seq[T] =
-    Option(r.getAs[scala.collection.Seq[T]](f)).map(_.toSeq).getOrElse(Nil)
+  /** `st`'s fields, read by `field`, with every null the encoder cannot
+    * hold replaced — driven by the encoder's schema: a missing array
+    * reads as empty, a missing primitive as 0, a present struct has its
+    * own fields filled; strings and options stay null/None. */
+  private def filledFields(st: StructType, field: String => Column): Seq[Column] =
+    st.fields.toSeq.map(f => filled(field(f.name), f.dataType, f.nullable).as(f.name))
 
-  private def rowToRecord(r: Row): LineageRecord = LineageRecord(
-    appId = r.getAs[String]("appId"),
-    appName = r.getAs[String]("appName"),
-    user = r.getAs[String]("user"),
-    funcName = r.getAs[String]("funcName"),
-    status = r.getAs[String]("status"),
-    error = optStr(r, "error"),
-    durationNs = r.getAs[Long]("durationNs"),
-    timestampMs = r.getAs[Long]("timestampMs"),
-    inputs = seqOf[Row](r, "inputs").map(i => InputEntity(
-      kind = i.getAs[String]("kind"), name = i.getAs[String]("name"),
-      format = optStr(i, "format"),
-      columnsRead = seqOf[String](i, "columnsRead"),
-      bytesRead = optLong(i, "bytesRead"), rowsRead = optLong(i, "rowsRead"),
-      partitionFilters = seqOf[String](i, "partitionFilters"),
-      partitionsRead = optLong(i, "partitionsRead"))),
-    output = Option(r.getAs[Row]("output")).map(o => OutputEntity(
-      kind = o.getAs[String]("kind"), name = o.getAs[String]("name"),
-      format = optStr(o, "format"), mode = optStr(o, "mode"),
-      partitionColumns = seqOf[String](o, "partitionColumns"),
-      staticPartitions = seqOf[String](o, "staticPartitions"),
-      partitionsWritten = optLong(o, "partitionsWritten"))),
-    outputColumns = seqOf[String](r, "outputColumns"),
-    columnLineage = seqOf[Row](r, "columnLineage").map(m => ColumnMapping(
-      output = m.getAs[String]("output"),
-      sources = seqOf[String](m, "sources"),
-      expression = optStr(m, "expression"))),
-    schemaFingerprint = r.getAs[String]("schemaFingerprint"),
-    rowsWritten = optLong(r, "rowsWritten"),
-    bytesWritten = optLong(r, "bytesWritten"),
-    bytesRead = optLong(r, "bytesRead"),
-    shuffleBytesWritten = optLong(r, "shuffleBytesWritten"),
-    shuffleBytesRead = optLong(r, "shuffleBytesRead"),
-    peakMemoryBytes = optLong(r, "peakMemoryBytes"),
-    spillBytes = optLong(r, "spillBytes"),
-    planFingerprint = r.getAs[String]("planFingerprint"),
-    queryText = optStr(r, "queryText"),
-    observed = seqOf[Row](r, "observed")
-      .map(o => (o.getAs[String]("name"), o.getAs[String]("value"))))
+  private def filled(c: Column, t: DataType, nullable: Boolean): Column = t match {
+    case st: StructType =>
+      val s = struct(filledFields(st, c.getField): _*)
+      if (nullable) when(c.isNotNull, s) else s
+    case at: ArrayType =>
+      val elems = at.elementType match {
+        case _: StructType => transform(c, filled(_, at.elementType, at.containsNull))
+        case _ => c
+      }
+      coalesce(elems, array().cast(at))
+    case _ if !nullable => coalesce(c, lit(0).cast(t))
+    case _ => c
+  }
 }

@@ -81,8 +81,7 @@ final class LineageListener(private[lineage] val sinks: Seq[LineageSink]) extend
     val scanStats: Map[String, ScanStat] = planNodes
       .collect {
         case f: FileSourceScanExec =>
-          val name = f.tableIdentifier.map(_.unquotedString)
-            .getOrElse(f.relation.location.rootPaths.map(_.toString).mkString(","))
+          val name = PlanExtractor.fileRelationName(f.tableIdentifier, f.relation)
           val filters = try f.partitionFilters.map(_.sql)
             catch { case NonFatal(_) => Seq.empty[String] }
           name -> ScanStat(
@@ -182,27 +181,19 @@ private[lineage] object PlanShape {
 object LineageListener {
 
   /** `Dataset.observe()` metrics of the finished run, flattened to
-    * (metricSet.column, value-string) pairs — the in-plan data-quality
+    * (metricSet.column, value-string) entries — the in-plan data-quality
     * gate values (CollectMetrics accumulates them executor-side for
     * free; no extra pass over the data). Sorted for record determinism.
     */
-  private[lineage] def harvestObserved(qe: QueryExecution): Seq[(String, String)] =
+  private[lineage] def harvestObserved(qe: QueryExecution): Seq[Observed] =
     try {
       qe.observedMetrics.toSeq.flatMap { case (name, row) =>
         row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-          (s"$name.$f", String.valueOf(row.get(i)))
+          Observed(s"$name.$f", String.valueOf(row.get(i)))
         }
-      }.sortBy(_._1)
+      }.sortBy(_.name)
     } catch { case NonFatal(_) => Seq.empty }
 
-  /** Recurring-query identity for the catalog side: sha-256 of the
-    * CANONICALIZED analyzed plan — `canonicalized` normalizes attribute
-    * ids and alias names, so re-running the same job (fresh session,
-    * fresh exprIds) yields the same fingerprint, while any structural
-    * change (different filter, extra column, other table) changes it.
-    * Literal-sensitive by design: a catalog wanting parameterized-job
-    * grouping groups on (inputs, outputs, columnLineage) instead.
-    */
   /** Cap on the recorded query text — a catalog field, not a plan dump.
     * 8 KiB holds any hand-written SQL and the head of a generated plan;
     * a million-record JSONL catalog stays loadable. */
@@ -245,14 +236,18 @@ object LineageListener {
         else redacted.take(QUERY_TEXT_MAX) + " ...[truncated]")
     } catch { case NonFatal(_) => None }
 
+  /** Recurring-query identity for the catalog side: sha-256 of the
+    * CANONICALIZED analyzed plan — `canonicalized` normalizes attribute
+    * ids and alias names, so re-running the same job (fresh session,
+    * fresh exprIds) yields the same fingerprint, while any structural
+    * change (different filter, extra column, other table) changes it.
+    * Literal-sensitive by design: a catalog wanting parameterized-job
+    * grouping groups on (inputs, outputs, columnLineage) instead.
+    */
   private[lineage] def planFingerprint(
       analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
-    try {
-      val canonical = analyzed.canonicalized.toString
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-      d.digest(canonical.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-    } catch { case NonFatal(_) => "" }
+    try MetadataExtractor.sha256Hex(analyzed.canonicalized.toString)
+    catch { case NonFatal(_) => "" }
 }
 
 /** One-line enablement, mirroring the reference's install-and-forget UX.

@@ -1,7 +1,14 @@
 package graft.lineage
 
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
 /** Structured lineage/metadata record emitted once per Spark SQL action —
   * the engine's equivalent of the reference listener's report payload.
+  * These case classes are the record's only format statement: the JSONL
+  * line ([[LineageRecord.toJson]]), the catalog schema and the catalog
+  * reader ([[LineageCatalog]]) all derive from them, so a new field is
+  * added here and nowhere else.
   */
 final case class InputEntity(
     kind: String,            // "path" | "table" | "v2" | "inline"
@@ -75,45 +82,20 @@ final case class LineageRecord(
     // Dataset.observe() metrics harvested from the run — the in-plan
     // data-quality gates (row counts, violation sums) a pipeline attaches
     // with CollectMetrics, flowing to the catalog with the run record
-    observed: Seq[(String, String)] = Seq.empty
+    observed: Seq[Observed] = Seq.empty
 ) {
 
-  /** Dependency-free JSON rendering (newline-safe, driver-parsable). */
-  def toJson: String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
-    def opt(o: Option[String]): String = o.map(q).getOrElse("null")
-    def num(o: Option[Long]): String = o.map(_.toString).getOrElse("null")
-    val ins = arr(inputs.map(i =>
-      s"""{"kind":${q(i.kind)},"name":${q(i.name)},"format":${opt(i.format)},"columnsRead":${arr(i.columnsRead.map(q))},""" +
-        s""""bytesRead":${num(i.bytesRead)},"rowsRead":${num(i.rowsRead)},""" +
-        s""""partitionFilters":${arr(i.partitionFilters.map(q))},"partitionsRead":${num(i.partitionsRead)}}"""))
-    val out = output.map(o =>
-      s"""{"kind":${q(o.kind)},"name":${q(o.name)},"format":${opt(o.format)},"mode":${opt(o.mode)},""" +
-        s""""partitionColumns":${arr(o.partitionColumns.map(q))},"staticPartitions":${arr(o.staticPartitions.map(q))},""" +
-        s""""partitionsWritten":${num(o.partitionsWritten)}}""").getOrElse("null")
-    val colLin = arr(columnLineage.map(m =>
-      s"""{"output":${q(m.output)},"sources":${arr(m.sources.map(q))},"expression":${opt(m.expression)}}"""))
-    // fixed-key objects (not name-keyed pairs) so consumers read a
-    // stable typed schema like every other record field
-    val obs = arr(observed.map { case (k, v) =>
-      s"""{"name":${q(k)},"value":${q(v)}}""" })
-    s"""{"appId":${q(appId)},"appName":${q(appName)},"user":${q(user)},"observed":$obs,""" +
-      s""""funcName":${q(funcName)},"status":${q(status)},"error":${opt(error)},""" +
-      s""""durationNs":$durationNs,"timestampMs":$timestampMs,"inputs":$ins,"output":$out,""" +
-      s""""outputColumns":${arr(outputColumns.map(q))},"columnLineage":$colLin,""" +
-      s""""schemaFingerprint":${q(schemaFingerprint)},"rowsWritten":${rowsWritten.map(_.toString).getOrElse("null")},""" +
-      s""""bytesWritten":${bytesWritten.map(_.toString).getOrElse("null")},"bytesRead":${bytesRead.map(_.toString).getOrElse("null")},""" +
-      s""""shuffleBytesWritten":${num(shuffleBytesWritten)},"shuffleBytesRead":${num(shuffleBytesRead)},""" +
-      s""""peakMemoryBytes":${num(peakMemoryBytes)},"spillBytes":${num(spillBytes)},""" +
-      s""""planFingerprint":${q(planFingerprint)},"queryText":${opt(queryText)}}"""
-  }
+  /** One JSONL catalog line: every field under its case-class name, in
+    * declaration order, `None` as `null`. */
+  def toJson: String = LineageJson.mapper.writeValueAsString(this)
+}
+
+/** One `Dataset.observe()` metric of a run (`metricSet.column`, value). */
+final case class Observed(name: String, value: String)
+
+/** The one JSON writer for everything graft emits: records, OpenLineage
+  * events and `Verify`'s oracle file. Configured once, then only read,
+  * so every thread shares it. */
+private[graft] object LineageJson {
+  val mapper: JsonMapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
 }

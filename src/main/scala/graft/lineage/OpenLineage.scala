@@ -1,5 +1,7 @@
 package graft.lineage
 
+import scala.collection.immutable.ListMap
+
 /** Renders a [[LineageRecord]] as an OpenLineage RunEvent — the public,
   * vendor-neutral lineage wire format (openlineage.io, spec 1-0-5) that
   * catalog collectors (Marquez-style services) ingest natively. This is
@@ -31,27 +33,16 @@ object OpenLineage {
   private def facetUrl(defn: String): String =
     s"https://openlineage.io/spec/facets/1-0-0/$defn.json"
 
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  // events are ordered maps, so keys appear in the order built here
+  private type Obj = ListMap[String, Any]
+  private def obj(fields: (String, Any)*): Obj = ListMap(fields: _*)
+  private def write(event: Obj): String = LineageJson.mapper.writeValueAsString(event)
 
-  private def obj(fields: Seq[(String, String)]): String =
-    fields.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+  private def facet(defn: String, extra: (String, Any)*): Obj =
+    obj(Seq("_producer" -> Producer, "_schemaURL" -> facetUrl(defn)) ++ extra: _*)
 
-  private def arr(xs: Seq[String]): String = xs.mkString("[", ",", "]")
-
-  private def facet(defn: String, extra: (String, String)*): Seq[(String, String)] =
-    Seq("_producer" -> q(Producer), "_schemaURL" -> q(facetUrl(defn))) ++ extra
-
-  private def schemaFacet(cols: Seq[String]): (String, String) =
-    "schema" -> obj(facet("SchemaDatasetFacet",
-      "fields" -> arr(cols.map(c => obj(Seq("name" -> q(c)))))))
+  private def schemaFacet(cols: Seq[String]): (String, Obj) =
+    "schema" -> facet("SchemaDatasetFacet", "fields" -> cols.map(c => obj("name" -> c)))
 
   /** Dataset naming: split "scheme-less path or table" into the spec's
     * (namespace, name) pair — paths namespace under "file", tables and
@@ -72,21 +63,17 @@ object OpenLineage {
     val startMs = r.timestampMs - math.max(0L, r.durationNs / 1000000L)
     val inputs = r.inputs.map { i =>
       val (ns, name) = datasetRef(i.kind, i.name)
-      obj(Seq(
-        "namespace" -> q(ns), "name" -> q(name),
-        "facets" -> obj(Seq(schemaFacet(i.columnsRead)))))
+      obj("namespace" -> ns, "name" -> name, "facets" -> obj(schemaFacet(i.columnsRead)))
     }
-    obj(Seq(
-      "eventType" -> q("START"),
-      "eventTime" -> q(java.time.Instant.ofEpochMilli(startMs).toString),
-      "run" -> obj(Seq("runId" -> q(runIdOf(r)))),
-      "job" -> obj(Seq(
-        "namespace" -> q("graft"),
-        "name" -> q(s"${r.appName}.${r.funcName}"))),
-      "inputs" -> arr(inputs),
-      "outputs" -> arr(Nil),
-      "producer" -> q(Producer),
-      "schemaURL" -> q(SchemaUrl)))
+    write(obj(
+      "eventType" -> "START",
+      "eventTime" -> java.time.Instant.ofEpochMilli(startMs).toString,
+      "run" -> obj("runId" -> runIdOf(r)),
+      "job" -> obj("namespace" -> "graft", "name" -> s"${r.appName}.${r.funcName}"),
+      "inputs" -> inputs,
+      "outputs" -> Nil,
+      "producer" -> Producer,
+      "schemaURL" -> SchemaUrl))
   }
 
   /** START + COMPLETE/FAIL as one ndjson pair (two lines) — the shape
@@ -98,68 +85,60 @@ object OpenLineage {
   def toRunEvent(r: LineageRecord): String = {
     val eventType = if (r.status == "success") "COMPLETE" else "FAIL"
     val eventTime = java.time.Instant.ofEpochMilli(r.timestampMs).toString
-    val runId = runIdOf(r)
 
-    val runFacets: Seq[(String, String)] =
-      r.error.map(e => "errorMessage" -> obj(facet("ErrorMessageRunFacet",
-        "message" -> q(e), "programmingLanguage" -> q("scala")))).toSeq
+    val runFacets = r.error.map(e => "errorMessage" -> facet("ErrorMessageRunFacet",
+      "message" -> e, "programmingLanguage" -> "scala")).toSeq
 
     val inputs = r.inputs.map { i =>
       val (ns, name) = datasetRef(i.kind, i.name)
-      val stats = Seq(
-        i.rowsRead.map(n => "rowCount" -> n.toString),
-        i.bytesRead.map(n => "size" -> n.toString)).flatten
+      val stats = Seq(i.rowsRead.map("rowCount" -> _), i.bytesRead.map("size" -> _)).flatten
       obj(Seq(
-        "namespace" -> q(ns), "name" -> q(name),
-        "facets" -> obj(Seq(schemaFacet(i.columnsRead)))) ++
+        "namespace" -> ns, "name" -> name,
+        "facets" -> obj(schemaFacet(i.columnsRead))) ++
         (if (stats.isEmpty) Nil
-         else Seq("inputFacets" -> obj(Seq(
-           "inputStatistics" -> obj(facet("InputStatisticsInputDatasetFacet", stats: _*)))))))
+         else Seq("inputFacets" -> obj(
+           "inputStatistics" -> facet("InputStatisticsInputDatasetFacet", stats: _*)))): _*)
     }
 
     val outputs = r.output.toSeq.map { o =>
       val (ns, name) = datasetRef(o.kind, o.name)
       val colLineage =
         if (r.columnLineage.isEmpty) Nil
-        else Seq("columnLineage" -> obj(facet("ColumnLineageDatasetFacet",
+        else Seq("columnLineage" -> facet("ColumnLineageDatasetFacet",
           "fields" -> obj(r.columnLineage.map { m =>
-            m.output -> obj(Seq("inputFields" -> arr(m.sources.map { src =>
+            m.output -> obj(Seq("inputFields" -> m.sources.map { src =>
               // sources are "table_or_path.column": split on the LAST dot
               val cut = src.lastIndexOf('.')
               val (ds, field) =
                 if (cut < 0) (src, src) else (src.substring(0, cut), src.substring(cut + 1))
-              obj(Seq("namespace" -> q("graft"), "name" -> q(ds), "field" -> q(field)))
-            })) ++ (m.expression match {
+              obj("namespace" -> "graft", "name" -> ds, "field" -> field)
+            }) ++ (m.expression match {
               // spec's per-field transformation slots: IDENTITY for plain
               // reads/renames, the Catalyst SQL derivation otherwise
               case Some(e) => Seq(
-                "transformationType" -> q("EXPRESSION"),
-                "transformationDescription" -> q(e))
-              case None => Seq("transformationType" -> q("IDENTITY"))
-            }))
-          }))))
-      val stats = Seq(
-        r.rowsWritten.map(n => "rowCount" -> n.toString),
-        r.bytesWritten.map(n => "size" -> n.toString)).flatten
+                "transformationType" -> "EXPRESSION",
+                "transformationDescription" -> e)
+              case None => Seq("transformationType" -> "IDENTITY")
+            }): _*)
+          }: _*)))
+      val stats = Seq(r.rowsWritten.map("rowCount" -> _), r.bytesWritten.map("size" -> _)).flatten
       obj(Seq(
-        "namespace" -> q(ns), "name" -> q(name),
-        "facets" -> obj(schemaFacet(r.outputColumns) +: colLineage)) ++
+        "namespace" -> ns, "name" -> name,
+        "facets" -> obj(schemaFacet(r.outputColumns) +: colLineage: _*)) ++
         (if (stats.isEmpty) Nil
-         else Seq("outputFacets" -> obj(Seq(
-           "outputStatistics" -> obj(facet("OutputStatisticsOutputDatasetFacet", stats: _*)))))))
+         else Seq("outputFacets" -> obj(
+           "outputStatistics" -> facet("OutputStatisticsOutputDatasetFacet", stats: _*)))): _*)
     }
 
-    obj(Seq(
-      "eventType" -> q(eventType),
-      "eventTime" -> q(eventTime),
-      "run" -> obj(Seq("runId" -> q(runId)) ++
-        (if (runFacets.isEmpty) Nil else Seq("facets" -> obj(runFacets)))),
-      "job" -> obj(Seq(
-        "namespace" -> q("graft"),
-        "name" -> q(s"${r.appName}.${r.funcName}"))),
-      "inputs" -> arr(inputs),
-      "outputs" -> arr(outputs),
-      "producer" -> q(Producer),
-      "schemaURL" -> q(SchemaUrl)))
+    write(obj(
+      "eventType" -> eventType,
+      "eventTime" -> eventTime,
+      "run" -> obj(Seq("runId" -> runIdOf(r)) ++
+        (if (runFacets.isEmpty) Nil else Seq("facets" -> obj(runFacets: _*))): _*),
+      "job" -> obj("namespace" -> "graft", "name" -> s"${r.appName}.${r.funcName}"),
+      "inputs" -> inputs,
+      "outputs" -> outputs,
+      "producer" -> Producer,
+      "schemaURL" -> SchemaUrl))
   }
 }

@@ -1,11 +1,13 @@
 package graft.lineage
 
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.HiveTableRelation
 import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation, SaveIntoDataSourceCommand}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.command.CreateDataSourceTableAsSelectCommand
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Logical-plan walkers extracting input/output entities from an analyzed
   * plan — the core of the reference's "metadata extraction from Spark
@@ -51,16 +53,12 @@ object PlanExtractor {
         val cols = readColumns(lr.output, referenced)
         lr.relation match {
           case fs: HadoopFsRelation =>
-            val name = lr.catalogTable.map(_.identifier.unquotedString)
-              .getOrElse(fs.location.rootPaths.map(_.toString).mkString(","))
             val kind = if (lr.catalogTable.isDefined) "table" else "path"
-            InputEntity(kind, name, Some(fs.fileFormat.toString.toLowerCase), cols)
+            InputEntity(kind, fileRelationName(lr.catalogTable.map(_.identifier), fs),
+              Some(fs.fileFormat.toString.toLowerCase), cols)
           case other =>
-            org.apache.spark.sql.GraftBridge.jdbcIdentity(other) match {
-              case Some((url, table)) =>
-                // stable, credential-free identity: scheme://host/db!table
-                InputEntity("jdbc", s"${scrubJdbcUrl(url)}!$table",
-                  Some("jdbc"), cols)
+            jdbcName(other) match {
+              case Some(name) => InputEntity("jdbc", name, Some("jdbc"), cols)
               case None =>
                 InputEntity("table",
                   lr.catalogTable.map(_.identifier.unquotedString).getOrElse(other.toString),
@@ -76,6 +74,18 @@ object PlanExtractor {
         InputEntity("inline", "local", None, Nil)
     }
   }
+
+  /** An entity read through files: its catalog identifier when it has
+    * one, else its root paths joined by `,`. The listener keys each
+    * physical scan's stats by this same name. */
+  private[lineage] def fileRelationName(table: Option[TableIdentifier], fs: HadoopFsRelation): String =
+    table.map(_.unquotedString).getOrElse(fs.location.rootPaths.map(_.toString).mkString(","))
+
+  /** A JDBC relation's stable, credential-free identity,
+    * `scheme://host/db!table`; None for any other relation. */
+  private def jdbcName(rel: BaseRelation): Option[String] =
+    org.apache.spark.sql.GraftBridge.jdbcIdentity(rel)
+      .map { case (url, table) => s"${scrubJdbcUrl(url)}!$table" }
 
   /** Credential-free JDBC url: drops the query string and any
     * user:password@ userinfo — secrets travel in url params
@@ -187,13 +197,11 @@ object PlanExtractor {
 
   /** Stable display name for a leaf node (used by column lineage). */
   def leafName(leaf: LogicalPlan): String = leaf match {
-    case lr: LogicalRelation =>
-      lr.catalogTable.map(_.identifier.unquotedString).getOrElse(lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString).mkString(",")
-        case o => org.apache.spark.sql.GraftBridge.jdbcIdentity(o)
-          .map { case (url, t) => s"${scrubJdbcUrl(url)}!$t" }
-          .getOrElse(o.toString)
-      })
+    case lr: LogicalRelation => lr.relation match {
+      case fs: HadoopFsRelation => fileRelationName(lr.catalogTable.map(_.identifier), fs)
+      case o => lr.catalogTable.map(_.identifier.unquotedString)
+        .orElse(jdbcName(o)).getOrElse(o.toString)
+    }
     case dv2: DataSourceV2Relation => dv2.name
     case ht: HiveTableRelation => ht.tableMeta.identifier.unquotedString
     case _: LocalRelation => "local"

@@ -66,8 +66,8 @@ final class StreamingLineageListener private (
       val dropped = p.stateOperators.toSeq.map(_.numRowsDroppedByWatermark).sum
       val observed =
         (if (p.stateOperators.nonEmpty)
-          Seq("rowsDroppedByWatermark" -> dropped.toString) else Nil) ++
-        Option(p.eventTime.get("watermark")).map("watermark" -> _)
+          Seq(Observed("rowsDroppedByWatermark", dropped.toString)) else Nil) ++
+        Option(p.eventTime.get("watermark")).map(Observed("watermark", _))
       LineageRecord(
         appId = appId,
         appName = appName,

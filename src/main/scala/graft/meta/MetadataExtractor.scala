@@ -13,11 +13,13 @@ import org.apache.spark.sql.types.StructType
 object MetadataExtractor {
 
   /** Stable fingerprint of a schema (names + canonical types). */
-  def schemaFingerprint(schema: StructType): String = {
-    val canon = schema.fields.map(f => s"${f.name}:${f.dataType.sql}:${f.nullable}").mkString(";")
-    val d = java.security.MessageDigest.getInstance("SHA-256").digest(canon.getBytes("UTF-8"))
-    d.map(b => f"$b%02x").mkString
-  }
+  def schemaFingerprint(schema: StructType): String =
+    sha256Hex(schema.fields.map(f => s"${f.name}:${f.dataType.sql}:${f.nullable}").mkString(";"))
+
+  /** Lower-case hex SHA-256 of `s`'s UTF-8 bytes. */
+  def sha256Hex(s: String): String =
+    java.util.HexFormat.of().formatHex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
   /** Per-column numeric profile (min/max/null-count/distinct) of any
     * DataFrame's columns, one row per column — ALL stats in a single

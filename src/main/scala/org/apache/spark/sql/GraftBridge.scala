@@ -21,6 +21,16 @@ object GraftBridge {
     * registry round-trip through SQL text. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** `t` with every field, element and value nullable at every depth
+    * (`StructType.asNullable` is private[spark]). */
+  def asNullable(t: types.StructType): types.StructType = t.asNullable
+
+  /** Whether `st` is a shuffle map stage (`shuffleDepId` is
+    * private[spark]): the final stage of the job AQE runs per query
+    * stage. */
+  def isShuffleMapStage(st: org.apache.spark.scheduler.StageInfo): Boolean =
+    st.shuffleDepId.isDefined
+
   /** (connection url, table-or-query) of a JDBC relation, if `rel` is
     * one — `JDBCRelation` and `JDBCOptions` are private[sql], so the
     * lineage extractor names JDBC inputs through this door. */

@@ -25,7 +25,7 @@ class ObservedMetricsSpec extends AnyFunSpec with SparkTestBase {
         r.output.isDefined && r.observed.nonEmpty)),
         "no record with observed metrics arrived")
       val rec = sink.records.find(r => r.output.isDefined && r.observed.nonEmpty).get
-      val obs = rec.observed.toMap
+      val obs = rec.observed.map(o => o.name -> o.value).toMap
       val total = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       assert(obs("gate.rows_in") == total.toString, s"observed: $obs")
       assert(obs("gate.neg_qty") == "0")

@@ -42,7 +42,7 @@ class WatermarkDropSpec extends AnyFunSpec with SparkTestBase {
 
       assert(eventually()(sink.records.exists(r =>
           r.funcName.startsWith("streaming:wm_out") &&
-            r.observed.exists { case (k, v) =>
+            r.observed.exists { case Observed(k, v) =>
               k == "rowsDroppedByWatermark" && v.toLong >= 1L })),
         "no record counted the watermark-dropped row; observed=" +
           sink.records.filter(_.funcName.startsWith("streaming:wm_out"))
@@ -51,13 +51,13 @@ class WatermarkDropSpec extends AnyFunSpec with SparkTestBase {
       // the watermark itself rides along for correlation
       assert(sink.records.exists(r =>
           r.funcName.startsWith("streaming:wm_out") &&
-            r.observed.exists { case (k, v) => k == "watermark" && v.nonEmpty }),
+            r.observed.exists { case Observed(k, v) => k == "watermark" && v.nonEmpty }),
         "watermark missing from observed metrics")
 
       // a batch that dropped nothing reports an explicit zero, not absence
       assert(sink.records.exists(r =>
           r.funcName.startsWith("streaming:wm_out") &&
-            r.observed.contains("rowsDroppedByWatermark" -> "0")),
+            r.observed.contains(Observed("rowsDroppedByWatermark", "0"))),
         "drop-free batches must still report the counter (as 0)")
     } finally {
       q.stop()
